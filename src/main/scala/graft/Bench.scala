@@ -15,6 +15,8 @@ import org.apache.spark.sql.SparkSession
   *  - the full record (per-rep times included) is ALSO written to
   *    SPARK_GRAFT_BENCH_OUT (default BENCH_local.json) — the stdout
   *    line survives tail-capture truncation only up to a point;
+  *  - a query with any failed rep reports -1, is counted in `n_failed`
+  *    and makes the run exit 1;
   *  - `job_floor_sec` is the median wall time of an EMPTY noop job on
   *    this session, so fixed local job-submission overhead (~0.3s/query
   *    at local[32]) is separable from plan cost when comparing against
@@ -190,7 +192,9 @@ object Bench {
     val repsJson = results.map { case (k, _, ts) =>
       "\"" + k + "\":[" + ts.mkString(",") + "]"
     }.mkString("{", ",", "}")
+    // failed queries (-1) stay out of `total` and are counted in `n_failed`
     val total = results.map(_._2).filter(_ >= 0).sum
+    val nFailed = results.count(_._2 < 0)
     // Full artifact (all queries, per-rep samples) to a file: the driver's
     // stdout tail-capture keeps only the LAST 2000 chars, so a ~260-query
     // full-precision map can never survive it (r2 and r3 both recorded
@@ -199,7 +203,7 @@ object Bench {
     val outFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_local.json")
     if (outFile.nonEmpty) {
       val full =
-        s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"rep_times":$repsJson,"sf":"$sfDir","job_floor_sec":$jobFloor,"artifact_prewarm_sec":$prewarmSec,"reps":$reps}"""
+        s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"rep_times":$repsJson,"sf":"$sfDir","job_floor_sec":$jobFloor,"artifact_prewarm_sec":$prewarmSec,"reps":$reps,"n_failed":$nFailed}"""
       java.nio.file.Files.write(java.nio.file.Paths.get(outFile),
         (full + "\n").getBytes("UTF-8"))
     }
@@ -208,7 +212,7 @@ object Bench {
     // chars (2000-char tail minus sbt's trailing "[success] ..." footer).
     def r3(v: Double): String = if (v < 0) "-1" else f"$v%.3f"
     val header =
-      s"""{"metric":"total","value":${r3(total)},"unit":"sec","sf":"$sfDir","job_floor_sec":${r3(jobFloor)},"artifact_prewarm_sec":${r3(prewarmSec)},"reps":$reps,"n_queries":${results.length},"queries_full":"$outFile","queries":{"""
+      s"""{"metric":"total","value":${r3(total)},"unit":"sec","sf":"$sfDir","job_floor_sec":${r3(jobFloor)},"artifact_prewarm_sec":${r3(prewarmSec)},"reps":$reps,"n_queries":${results.length},"n_failed":$nFailed,"queries_full":"$outFile","queries":{"""
     val budget = 1700 - header.length - 2 // closing "}}"
     val entries = results.sortBy { case (_, v, _) => -v }
       .map { case (k, v, _) => "\"" + k + "\":" + r3(v) }
@@ -220,5 +224,6 @@ object Bench {
     }
     println(header + packed.toString + "}}")
     spark.stop()
+    if (nFailed > 0) sys.exit(1)
   }
 }

@@ -56,7 +56,7 @@ final class Catalog(val spark: SparkSession) {
 /** Scratch-space selection for graft-owned sessions (Bench/Verify/tests):
   * prefer a RAM-backed tmpfs for everything ephemeral — shuffle/spill
   * files (`spark.local.dir`), streaming checkpoints, and the temp dirs
-  * the sink-roundtrip queries write through (`java.io.tmpdir`). On this
+  * the sink-roundtrip queries write through ([[Scratch.tempDir]]). On this
   * harness `/tmp` is ext4: leaving scratch there charges every shuffle
   * write and every micro-batch commit a real-disk fsync that a
   * single-process in-memory engine (the DuckDB oracle) never pays. On a
@@ -64,39 +64,54 @@ final class Catalog(val spark: SparkSession) {
   * local NVMe — standard deployment practice, not a semantics change.
   */
 object Scratch {
-  /** Pick the scratch base and retarget `java.io.tmpdir` at it (the
-    * property is read at every `Files.createTempDirectory` call, so
-    * setting it at main start covers all later temp allocations).
-    * Falls back to the existing tmpdir when /dev/shm is unavailable.
+  /** The scratch base: a per-PID directory under /dev/shm, or the JVM's
+    * tmpdir when /dev/shm is unavailable. Resolved once per JVM, so the
+    * sibling sweep below runs once, not on every temp allocation.
+    */
+  private lazy val base: String = {
+    val shm = new java.io.File("/dev/shm")
+    if (shm.isDirectory && shm.canWrite) {
+      val root = new java.io.File(shm, "graft-scratch")
+      root.mkdirs()
+      // Per-PID subdir, so concurrent graft JVMs (a test run next to a
+      // Verify run) can never clobber each other's shuffle files. tmpfs
+      // survives JVM exit and the sink-roundtrip queries create temp
+      // dirs every run, so reclaim siblings whose owning process is
+      // gone instead of wiping the whole root (which live-deleted a
+      // concurrent run's scratch when two sbt sessions overlapped).
+      val pid = ProcessHandle.current().pid()
+      val mine = new java.io.File(root, pid.toString)
+      val siblings = root.listFiles()
+      if (siblings != null) siblings.foreach { f =>
+        val stale = f.getName.toLongOption match {
+          case Some(p) => !ProcessHandle.of(p).isPresent
+          case None    => true // pre-per-pid layout leftovers
+        }
+        if (stale) deleteRecursively(f)
+      }
+      mine.getAbsolutePath
+    } else System.getProperty("java.io.tmpdir")
+  }
+
+  /** The scratch base, created if missing. Also points `java.io.tmpdir`
+    * at it, for Spark and library code that allocates through the
+    * property. That retargeting does not reach `Files.createTempDirectory`
+    * once anything in the JVM has created a temp file: the JDK caches
+    * the property on first use (`TempFileHelper`). graft's own temp
+    * directories therefore go through [[tempDir]], never through the
+    * property.
     */
   def dir(): String = {
-    val shm = new java.io.File("/dev/shm")
-    val base =
-      if (shm.isDirectory && shm.canWrite) {
-        val root = new java.io.File(shm, "graft-scratch")
-        root.mkdirs()
-        // Per-PID subdir, so concurrent graft JVMs (a test run next to a
-        // Verify run) can never clobber each other's shuffle files. tmpfs
-        // survives JVM exit and the sink-roundtrip queries create temp
-        // dirs every run, so reclaim siblings whose owning process is
-        // gone instead of wiping the whole root (which live-deleted a
-        // concurrent run's scratch when two sbt sessions overlapped).
-        val pid = ProcessHandle.current().pid()
-        val mine = new java.io.File(root, pid.toString)
-        val siblings = root.listFiles()
-        if (siblings != null) siblings.foreach { f =>
-          val stale = f.getName.toLongOption match {
-            case Some(p) => !ProcessHandle.of(p).isPresent
-            case None    => true // pre-per-pid layout leftovers
-          }
-          if (stale) deleteRecursively(f)
-        }
-        mine.mkdirs()
-        mine.getAbsolutePath
-      } else System.getProperty("java.io.tmpdir")
+    new java.io.File(base).mkdirs()
     System.setProperty("java.io.tmpdir", base)
     base
   }
+
+  /** A fresh directory under the scratch base, named `prefix` plus a
+    * random suffix.
+    */
+  def tempDir(prefix: String): String =
+    java.nio.file.Files.createTempDirectory(java.nio.file.Paths.get(dir()), prefix).toString
 
   private def deleteRecursively(f: java.io.File): Unit = {
     val children = f.listFiles()
@@ -104,10 +119,13 @@ object Scratch {
     f.delete(): Unit
   }
 
-  /** Session confs that strip client-side checksumming from the local
-    * filesystem for graft-owned sessions (Bench/Verify/probes).
+  /** graft's shared session conf set: static and session confs every
+    * graft-owned session applies at build time (Bench, Verify, the
+    * tests, the probes, the benchmark). Static confs belong here and
+    * nowhere else, because Spark reads them once per JVM.
     *
-    * Hadoop's default `file://` implementations (`LocalFileSystem` /
+    * Local filesystem without client-side checksums: Hadoop's default
+    * `file://` implementations (`LocalFileSystem` /
     * `LocalFs`) are CHECKSUMMED: every file written — parquet footers,
     * sink-roundtrip outputs, and each micro-batch's offset/commit/state
     * delta files — gets a `.crc` sidecar, and every read re-verifies it.
@@ -128,8 +146,29 @@ object Scratch {
     * snapshot work — which pauses ALL loaded providers' stores while
     * they serialize — is pure interference with timed reps. Long-lived
     * production queries should keep the 60s default.
+    *
+    * Spark's generated-class cache holds 4000 entries, not its default
+    * 100. Spark caches each compiled whole-stage or projection class by
+    * its source text and the compiling thread's class loader, so a
+    * class compiled both on the driver and in a task takes two entries.
+    * The cache is LRU and sized once per JVM, when `CodeGenerator`
+    * initializes; this static conf therefore only takes effect from the
+    * first session's build confs, not from `spark.conf.set` or an
+    * extension. With 100 entries, queries that run interleaved evict
+    * each other's classes before they come round again, and every run
+    * pays its Janino compiles anew. The cap is derived from the measured
+    * working set (sf0.001, AQE off, 4 cores): one pass over the 16 batch
+    * queries of the benchmark's sample fills ~375 entries, and one pass
+    * over the whole registry fills ~3030 for the 298 batch queries plus
+    * ~320 for the 7 `st_*` ones; 4000 holds a whole pass with ~20%
+    * headroom.
+    * An entry costs ~30 KB of heap (the heap freed by dropping 2000 and
+    * 3377 entries gave 29.8 and 29.2 KB each), so a full cache is
+    * ~120 MB. `st_*` queries still recompile on every run: each stream
+    * runs under a class loader of its own, which is part of the key.
     */
   val localFsConfs: Map[String, String] = Map(
+    "spark.sql.codegen.cache.maxEntries" -> "4000",
     "spark.hadoop.fs.file.impl" -> "org.apache.hadoop.fs.RawLocalFileSystem",
     "spark.hadoop.fs.AbstractFileSystem.file.impl" ->
       "org.apache.hadoop.fs.local.RawLocalFs",

@@ -299,7 +299,7 @@ object SparkEntry {
     }),
     // ---- Parity: sources/sinks (S1+K2, S3+K1) as round-trips ----
     "s1_csv_roundtrip" -> ((s, dir) => {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_csv").toString + "/region"
+      val tmp = Scratch.tempDir("graft_csv") + "/region"
       Sinks.csv(rd(s, dir, "region"), tmp, header = true)
       Sources.csv(s, tmp, schemaDdl = Some("r_regionkey INT, r_name STRING"))
         .orderBy(col("r_regionkey"))
@@ -308,7 +308,7 @@ object SparkEntry {
     // reader (type inference types r_regionkey bigint) -> same oracle
     // shape as the other source round-trips.
     "s2_excel_roundtrip" -> ((s, dir) => {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_xlsx").toString + "/region.xlsx"
+      val tmp = Scratch.tempDir("graft_xlsx") + "/region.xlsx"
       graft.ops.ExcelSink.xlsx(rd(s, dir, "region"), tmp)
       Sources.excel(s, tmp)
         .select(col("r_regionkey").cast("bigint").as("r_regionkey"), col("r_name"))
@@ -319,7 +319,7 @@ object SparkEntry {
     // sees it (S4), read it back through the PARTITIONED jdbc path
     // (4 range-parallel queries on n_nationkey — the at-scale shape).
     "s5_jdbc_roundtrip" -> ((s, dir) => {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_derby").toString
+      val tmp = Scratch.tempDir("graft_derby")
       System.setProperty("derby.stream.error.file", s"$tmp/derby.log")
       val url = s"jdbc:derby:$tmp/db;create=true"
       val props = Map("driver" -> "org.apache.derby.jdbc.EmbeddedDriver")
@@ -332,19 +332,19 @@ object SparkEntry {
         .orderBy(col("n_nationkey"))
     }),
     "k1_parquet_roundtrip" -> ((s, dir) => {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_pq").toString + "/nation"
+      val tmp = Scratch.tempDir("graft_pq") + "/nation"
       Sinks.parquet(rd(s, dir, "nation"), tmp)
       Sources.parquet(s, tmp).orderBy(col("n_nationkey"))
     }),
     // Small-files maintenance: fragment nation into one file per row,
     // compact back to the target size, read the compacted layout.
     "k6_compact" -> ((s, dir) => {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_cmp").toString + "/nation"
+      val tmp = Scratch.tempDir("graft_cmp") + "/nation"
       rd(s, dir, "nation").repartition(25).write.parquet(tmp)
       Sinks.compactParquet(s, tmp).orderBy(col("n_nationkey"))
     }),
     "k5_orc_roundtrip" -> ((s, dir) => {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_orc").toString + "/nation"
+      val tmp = Scratch.tempDir("graft_orc") + "/nation"
       Sinks.orc(rd(s, dir, "nation"), tmp)
       Sources.orc(s, tmp).orderBy(col("n_nationkey"))
     }),
@@ -352,7 +352,7 @@ object SparkEntry {
     // interleave key, read the laid-out table back, emit the z-keys —
     // row groups are then tight in BOTH dimensions for min/max skipping
     "k10_zorder" -> ((s, dir) => {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_zorder").toString + "/events_z"
+      val tmp = Scratch.tempDir("graft_zorder") + "/events_z"
       val ev = Events.normalizeTs(rd(s, dir, "events"))
         .select(col("event_id"), col("user_id"),
           datediff(to_date(col("ts")), lit(java.sql.Date.valueOf("1970-01-01")))
@@ -365,7 +365,7 @@ object SparkEntry {
     // schema drift: batch 1 lacks n_regionkey, batch 2 carries it;
     // mergeSchema surfaces nulls for the early rows
     "k9_schema_merge" -> ((s, dir) => {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_drift").toString
+      val tmp = Scratch.tempDir("graft_drift")
       val nation = rd(s, dir, "nation")
       nation.filter(col("n_nationkey") < 13)
         .select(col("n_nationkey"), col("n_name"))
@@ -378,7 +378,7 @@ object SparkEntry {
     }),
     // XML re-infers types like JSON -> same explicit casts back
     "k15_xml_roundtrip" -> ((s, dir) => {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_xml").toString + "/nation"
+      val tmp = Scratch.tempDir("graft_xml") + "/nation"
       Sinks.xml(rd(s, dir, "nation"), tmp, "nation")
       Sources.xml(s, tmp, "nation")
         .select(col("n_nationkey").cast("bigint").as("n_nationkey"), col("n_name"),
@@ -389,7 +389,7 @@ object SparkEntry {
     // directory back as raw text, re-parse and aggregate — the lossless
     // field roundtrip through the line format is what's being checked
     "k16_lines_roundtrip" -> ((s, dir) => {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_txt").toString + "/doclines"
+      val tmp = Scratch.tempDir("graft_txt") + "/doclines"
       Sinks.textLines(rd(s, dir, "documents")
         .select(concat_ws("|", col("lang"), col("doc_id")).as("value")), tmp)
       Sources.textLines(s, tmp)
@@ -405,7 +405,7 @@ object SparkEntry {
     // payloads; total byte mass is layout-independent (sum of per-file
     // lengths == sum of per-line bytes regardless of partitioning)
     "k17_binary_scan" -> ((s, dir) => {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_bin").toString + "/blobs"
+      val tmp = Scratch.tempDir("graft_bin") + "/blobs"
       Sinks.textLines(rd(s, dir, "documents")
         .select(concat_ws("|", col("lang"), col("doc_id")).as("value")), tmp)
       Sources.binaryFiles(s, tmp, "*.txt")
@@ -414,7 +414,7 @@ object SparkEntry {
     // fixed-width (mainframe-feed) roundtrip: right-padded fields at
     // fixed offsets, rtrim+cast on read
     "k19_fixed_width" -> ((s, dir) => {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_fw").toString + "/nation"
+      val tmp = Scratch.tempDir("graft_fw") + "/nation"
       Sinks.fixedWidth(rd(s, dir, "nation")
         .select(col("n_nationkey"), col("n_name"), col("n_regionkey")),
         tmp, Seq(6, 20, 6))
@@ -427,7 +427,7 @@ object SparkEntry {
     // bit-exact, timestamp via timestamp-micros, date via the `date`
     // logical type; min/max aggregates keep the check order-free.
     "k18_avro_roundtrip" -> ((s, dir) => {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_avro").toString + "/orders"
+      val tmp = Scratch.tempDir("graft_avro") + "/orders"
       // spread: the fixture scan is one row group, so without it ONE
       // task pays the whole deflate-6 encode (measured 0.55s of the
       // 1.12s median); a cluster-wide scan is already >= cores splits
@@ -446,7 +446,7 @@ object SparkEntry {
     }),
     // JSON re-infers types on read (ints widen to long) -> explicit casts
     "k8_json_roundtrip" -> ((s, dir) => {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_json").toString + "/nation"
+      val tmp = Scratch.tempDir("graft_json") + "/nation"
       Sinks.json(rd(s, dir, "nation"), tmp)
       Sources.json(s, tmp)
         .select(col("n_nationkey").cast("bigint").as("n_nationkey"), col("n_name"),
@@ -485,7 +485,7 @@ object SparkEntry {
     // keyed upsert (MERGE) into a parquet copy of nation: 3 updated
     // rows + 1 new key, then read the merged table back
     "k7_upsert" -> ((s, dir) => {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_ups").toString + "/nation"
+      val tmp = Scratch.tempDir("graft_ups") + "/nation"
       val nation = rd(s, dir, "nation")
       Sinks.parquet(nation, tmp)
       val updates = nation.filter(col("n_nationkey") < 3)
@@ -502,7 +502,7 @@ object SparkEntry {
     // 3 changed names, 1 byte-identical no-op row (must NOT version),
     // and 1 brand-new key
     "k12_scd2" -> ((s, dir) => {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_scd2").toString + "/nation"
+      val tmp = Scratch.tempDir("graft_scd2") + "/nation"
       val nation = rd(s, dir, "nation")
       val base = nation
         .withColumn("valid_from", lit(java.sql.Date.valueOf("2020-01-01")))
@@ -679,7 +679,7 @@ object SparkEntry {
     // then read back and re-aggregate — split assignment must survive
     // the write/read roundtrip including the partition-column encode
     "k11_split_write" -> ((s, dir) => {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_splits").toString + "/docs"
+      val tmp = Scratch.tempDir("graft_splits") + "/docs"
       val assigned = Curation.splitAssign(rd(s, dir, "documents"), "doc_id")
         .select(col("doc_id"), col("split"))
       Sinks.parquet(assigned, tmp, partitionBy = Seq("split"))
@@ -1239,7 +1239,7 @@ object SparkEntry {
     // materialized IVF: one-time partitioned layout, partition-pruned probe
     "e_ann_ivf_idx" -> ((s, dir) => {
       val emb = rd(s, dir, "embeddings")
-      val tmp = java.nio.file.Files.createTempDirectory("graft_ivf").toString + "/idx"
+      val tmp = Scratch.tempDir("graft_ivf") + "/idx"
       val centroids = Similarity.ivfBuildIndex(emb, tmp)
       val q = emb.filter(col("vec_id") === 0L)
         .select(col("embedding").cast("array<double>")).head().getSeq[Double](0).toArray
@@ -1304,7 +1304,7 @@ object SparkEntry {
       Graph.bfsReach(jaccardPairs(s, dir), "doc_a", "doc_b", 3)),
     // RFC 4180 dialect roundtrip: embedded comma/quote/newline survive
     "k_csv_multiline" -> ((s, dir) => {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_csvml").toString + "/nation"
+      val tmp = Scratch.tempDir("graft_csvml") + "/nation"
       val tricky = rd(s, dir, "nation").select(col("n_nationkey"),
         concat(col("n_name"), lit(",\""), lit("\n"), col("n_name")).as("tricky"))
       Sinks.csvRfc4180(tricky, tmp)
@@ -1319,7 +1319,7 @@ object SparkEntry {
     // (year grain keeps the partition-dir count small at fixture scale;
     // the mechanism is identical at any grain)
     "k_dynamic_overwrite" -> ((s, dir) => {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_dynow").toString + "/orders"
+      val tmp = Scratch.tempDir("graft_dynow") + "/orders"
       // NO spread here: measured SLOWER (1.11s -> 1.66s median) — the
       // year-partitioned write multiplies files per partition dir and
       // the read-back pays the listing
@@ -1505,7 +1505,7 @@ object SparkEntry {
     // time travel: three snapshots land, the as-of read must pin the
     // MIDDLE one (returning v0 or v5 instead fails the oracle hash)
     "k20_time_travel" -> ((s, dir) => {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_tt").toString + "/nation_tt"
+      val tmp = Scratch.tempDir("graft_tt") + "/nation_tt"
       val nation = rd(s, dir, "nation")
         .select(col("n_nationkey"), col("n_name"), col("n_regionkey"))
       Sinks.snapshotWrite(nation, tmp, 0)

@@ -21,15 +21,27 @@ object Sinks {
     * value is SPLIT across tasks by the advisory size instead of
     * serializing one giant task (plain repartition would bottleneck the
     * write on the largest tenant/date).
+    *
+    * With AQE off there is no rebalance: Spark resolves the hint only
+    * under AQE (and otherwise drops it with an `Unrecognized hint`
+    * warning), so it is not attached and the number of files per
+    * partition value follows the writing task count.
     */
   def parquet(df: DataFrame, path: String, partitionBy: Seq[String] = Nil): DataFrame = {
-    if (partitionBy.nonEmpty) {
-      import org.apache.spark.sql.functions.col
-      df.hint("rebalance", partitionBy.map(col): _*)
+    if (partitionBy.nonEmpty)
+      rebalanced(df, partitionBy)
         .write.mode(SaveMode.Overwrite).partitionBy(partitionBy: _*).parquet(path)
-    } else df.write.mode(SaveMode.Overwrite).parquet(path)
+    else df.write.mode(SaveMode.Overwrite).parquet(path)
     df
   }
+
+  /** `df` with a REBALANCE hint on `cols` when the session runs AQE,
+    * else `df` unchanged.
+    */
+  private[graft] def rebalanced(df: DataFrame, cols: Seq[String]): DataFrame =
+    if (df.sparkSession.conf.get("spark.sql.adaptive.enabled").toBoolean)
+      df.hint("rebalance", cols.map(org.apache.spark.sql.functions.col): _*)
+    else df
 
   /** K2 — delimited-text write, HDFS-transparent (reference:
     * simple_etl.py:374-388 drops to `rdd.map(",".join)` with NO quoting —
@@ -422,9 +434,9 @@ object Sinks {
       partitionBy: Seq[String]): Unit = {
     require(partitionBy.nonEmpty, "overwritePartitionsDynamic: no partition columns")
     // same REBALANCE-before-partitionBy rationale as [[parquet]]: the
-    // daily reload should not fragment the reloaded partition
-    import org.apache.spark.sql.functions.col
-    updates.hint("rebalance", partitionBy.map(col): _*)
+    // daily reload should not fragment the reloaded partition (with AQE
+    // off, files per partition follow the writing task count)
+    rebalanced(updates, partitionBy)
       .write.mode(SaveMode.Overwrite)
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy(partitionBy: _*).parquet(path)

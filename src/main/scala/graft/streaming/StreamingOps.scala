@@ -513,7 +513,7 @@ object StreamingOps {
     def purchases(df: DataFrame): DataFrame =
       df.filter(col("event_type") === "purchase")
         .select(col("event_id"), col("user_id"), col("value"))
-    val tmp = java.nio.file.Files.createTempDirectory("graft_stream_upsert").toString
+    val tmp = graft.Scratch.tempDir("graft_stream_upsert")
     val target = s"$tmp/tbl"
     purchases(graft.Tables.read(spark, dir, "events"))
       .filter(pmod(col("event_id"), lit(3L)) === 0L)

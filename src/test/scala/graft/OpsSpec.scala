@@ -528,6 +528,16 @@ class OpsSpec extends SparkSpec {
     assert(spark.sql("SELECT count(*) FROM sales_clean").head().getLong(0) === 3)
   }
 
+  test("Scratch.tempDir allocates under the scratch base after the JDK fixed its tmpdir") {
+    // the JDK reads java.io.tmpdir once, at its first temp file
+    java.nio.file.Files.deleteIfExists(java.nio.file.Files.createTempFile("graft-probe", ""))
+    val d = new java.io.File(Scratch.tempDir("graft-probe"))
+    try {
+      assert(d.isDirectory)
+      assert(d.getParentFile.getCanonicalPath === new java.io.File(Scratch.dir()).getCanonicalPath)
+    } finally d.delete()
+  }
+
   test("K1 partitioned parquet sink enables partition pruning") {
     val dir = java.nio.file.Files.createTempDirectory("graft-part").toString
     val ev = graft.ext.Events.normalizeTs(t("events"))
@@ -544,6 +554,21 @@ class OpsSpec extends SparkSpec {
     assert(plan.contains(s"PartitionFilters: [isnotnull(day") && plan.contains(s"= $oneDay)"),
       s"day filter should be a PartitionFilter (pruned before scan), plan:\n${plan.take(800)}")
     assert(back.count() === ev.filter(col("day") === oneDay).count())
+  }
+
+  test("K1 partitioned writes rebalance under AQE and carry no hint without it") {
+    import org.apache.spark.sql.catalyst.plans.logical.{RebalancePartitions, ResolvedHint, UnresolvedHint}
+    // (rebalanced, any hint left) in the analyzed plan of the write input
+    def shape(aqe: Boolean): (Boolean, Boolean) = {
+      val s = spark.newSession()
+      s.conf.set("spark.sql.adaptive.enabled", aqe.toString)
+      val plan = Sinks.rebalanced(s.range(10).withColumn("day", col("id") % 3), Seq("day"))
+        .queryExecution.analyzed
+      (plan.exists(_.isInstanceOf[RebalancePartitions]),
+        plan.exists { case _: UnresolvedHint | _: ResolvedHint => true; case _ => false })
+    }
+    assert(shape(aqe = true) === ((true, false)))
+    assert(shape(aqe = false) === ((false, false)))
   }
 
   test("bucketed tables join and aggregate with zero shuffle exchanges") {

@@ -4,7 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared Spark fixture: one local session per suite, config matching
-  * Verify/Bench (UTC, ANSI off, ns-as-long).
+  * Verify/Bench (UTC, ANSI off, ns-as-long, graft's shared conf set
+  * `Scratch.localFsConfs`).
   */
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
@@ -16,7 +17,7 @@ trait SparkSpec extends AnyFunSuite {
 object SparkSpec {
   lazy val session: SparkSession = {
     val tmpBase = Scratch.dir()
-    val s = SparkSession.builder()
+    val s = Scratch.localFsConfs.foldLeft(SparkSession.builder())((b, kv) => b.config(kv._1, kv._2))
       .master("local[4]")
       .appName("graft-test")
       .config("spark.local.dir", s"$tmpBase/spark-local")
