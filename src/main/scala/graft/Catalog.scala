@@ -52,7 +52,6 @@ final class Catalog(val spark: SparkSession) {
     Tables.all.foreach(t => register(t, Tables.read(spark, dir, t)))
 }
 
-/** Fixture-table reader helpers (TESTDATA.md / FIXTURES.md §2). */
 /** Scratch-space selection for graft-owned sessions (Bench/Verify/tests):
   * prefer a RAM-backed tmpfs for everything ephemeral — shuffle/spill
   * files (`spark.local.dir`), streaming checkpoints, and the temp dirs
@@ -175,6 +174,7 @@ object Scratch {
     "spark.sql.streaming.stateStore.maintenanceInterval" -> "600s")
 }
 
+/** Fixture-table reader helpers (TESTDATA.md / FIXTURES.md §2). */
 object Tables {
   val all: Seq[String] = Seq(
     "region", "nation", "customer", "supplier", "part", "orders",

@@ -6,7 +6,7 @@ import org.apache.spark.sql.SparkSession
 
 /** Session-scoped memo for shared artifact frames (the materialized-view
   * caches in [[SparkEntry]] and the catalog-metadata cache in
-  * [[Tables]]).
+  * [[Tables]]) and for inferred CSV schemas ([[graft.ops.Sources.csv]]).
   *
   * Replaces the ad-hoc `ConcurrentHashMap[String, _]` maps keyed by
   * `System.identityHashCode(session) + "|" + dir`, which had two defects

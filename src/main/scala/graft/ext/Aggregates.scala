@@ -1301,46 +1301,6 @@ FROM $table GROUP BY 1 ORDER BY 1"""
       .orderBy(col("day"))
   }
 
-  /** Exact interpolated percentiles (SQL `percentile` / DuckDB
-    * quantile_cont semantics: `lo + (pos - floor(pos)) * (hi - lo)` at
-    * `pos = p * (n-1)`) computed by DISTRIBUTED SORT instead of the
-    * built-in percentile aggregate. The built-in buffers every value in
-    * per-partition hash maps and serializes those maps through the
-    * partial/final merge — tens of seconds at a few million rows, and
-    * memory-unbounded at scale. This shape is a range-partitioned sort
-    * (scales like any orderBy), one O(partitions) size collect, and a
-    * boundary-index filter that ships exactly 2 rows per requested
-    * percentile to the driver. Eager (runs jobs); returns
-    * `(rowCount, values)` in the order of `ps`.
-    */
-  def exactPercentiles(df: DataFrame, valueCol: String, ps: Seq[Double]): (Long, Seq[Double]) = {
-    import org.apache.spark.storage.StorageLevel
-    val sorted = df.select(col(valueCol).cast("double").as("v"))
-      .where(col("v").isNotNull).sort("v")
-      .rdd.map(_.getDouble(0))
-    sorted.persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      val indexed = sorted.zipWithIndex()
-      val n = sorted.count()
-      if (n == 0L) (0L, ps.map(_ => Double.NaN))
-      else {
-        val targets = ps.map { p =>
-          val pos = p * (n - 1)
-          (math.floor(pos).toLong, math.ceil(pos).toLong, pos)
-        }
-        val need = targets.flatMap(t => Seq(t._1, t._2)).toSet
-        val at = indexed.filter { case (_, i) => need.contains(i) }
-          .collect().map { case (v, i) => i -> v }.toMap
-        (n, targets.map { case (lo, hi, pos) =>
-          // weighted two-sided interpolation: bit-equal to Spark's
-          // builtin Percentile and DuckDB quantile_cont (the one-sided
-          // lo + frac*(hi-lo) form differs by an ulp)
-          if (lo == hi) at(lo) else at(lo) * (hi - pos) + at(hi) * (pos - lo)
-        })
-      }
-    } finally { sorted.unpersist(blocking = false); () }
-  }
-
   /** Exact interpolated percentiles PER GROUP as a fully DECLARATIVE
     * plan (bit-equal to SQL `percentile` / DuckDB quantile_cont — see
     * the interpolation note below). The built-in `percentile` aggregate

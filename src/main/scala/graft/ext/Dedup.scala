@@ -437,36 +437,6 @@ object Dedup {
   def ngramJaccardPairs(docs: DataFrame, n: Int = 3, minJaccard: Double = 0.3): DataFrame =
     pairJaccard(shingleHashes(docs, n), minJaccard)
 
-  /** MinHash signatures: one row per doc with `numHashes` min-hash
-    * columns h0..h{k-1}, computed as min over shingles of
-    * xxhash64(hashIndex, shingle). Single groupBy — the signature is a
-    * fixed-width sketch, so downstream shuffles carry O(k) longs per doc
-    * regardless of document size.
-    */
-  def minhashSignatures(sh: DataFrame, numHashes: Int): DataFrame = {
-    val aggs = (0 until numHashes).map(i => min(xxhash64(lit(i), col("s"))).as(s"h$i"))
-    sh.groupBy(col("doc_id")).agg(aggs.head, aggs.tail: _*)
-  }
-
-  /** LSH banding: hash each band of `rowsPerBand` consecutive signature
-    * values to a bucket key; docs sharing any (band, bucket) are
-    * candidates. Shuffle key is (band, bucket) — skew-free for random
-    * hashes.
-    */
-  def lshCandidates(sig: DataFrame, numHashes: Int, rowsPerBand: Int): DataFrame = {
-    val numBands = numHashes / rowsPerBand
-    val bandStructs = (0 until numBands).map { bnd =>
-      val cols = (0 until rowsPerBand).map(r => col(s"h${bnd * rowsPerBand + r}"))
-      struct(lit(bnd).as("band"), xxhash64(cols: _*).as("bucket"))
-    }
-    val bands = sig.select(col("doc_id"), explode(array(bandStructs: _*)).as("bb"))
-      .select(col("doc_id"), col("bb.band").as("band"), col("bb.bucket").as("bucket"))
-    val l = bands.select(col("doc_id").as("doc_a"), col("band"), col("bucket"))
-    val r = bands.select(col("doc_id").as("doc_b"), col("band"), col("bucket"))
-    l.join(r, Seq("band", "bucket")).filter(col("doc_a") < col("doc_b"))
-      .select(col("doc_a"), col("doc_b")).distinct()
-  }
-
   // splitmix64 finalizer: full-avalanche 64-bit mix (public-domain
   // constant set, Steele et al. "Fast Splittable Pseudorandom Number
   // Generators").

@@ -1,14 +1,20 @@
 package graft.ops
 
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
+
+import graft.SessionMemo
 
 /** Extract-stage sources (reference: simple_etl.py:54-145, SURVEY.md §2.1).
   *
   * The reference reads with pandas then re-infers schema via
   * `spark.createDataFrame` with an all-string fallback
-  * (simple_etl.py:70-74,165-169). We read directly with Spark's
-  * distributed readers: schema inference happens once, at the scan, and
-  * the scan itself is parallel + column-pruned / predicate-pushed by
+  * (simple_etl.py:70-74,165-169), and its app reruns that inference on
+  * every interaction. We read directly with Spark's distributed
+  * readers: an inferred CSV schema is computed once per file version
+  * per session (see [[csv]] for the key and the racy window), and the
+  * scan itself is parallel + column-pruned / predicate-pushed by
   * Catalyst — at 100 TB the read IS the query, so the scan must be the
   * pushdown target, never a driver-side library.
   */
@@ -18,23 +24,80 @@ object Sources {
     * (reference: simple_etl.py:69-70). Pass an explicit schema via
     * `schemaDdl` to skip the inference pass (one fewer full read — at
     * scale, inference on TB-sized CSV is a job of its own).
+    *
+    * Without `schemaDdl`, inference runs once per file version per
+    * session. Spark's own inference costs two jobs (a `take(1)` for the
+    * header, then a full pass over the data) plus their driver-side
+    * planning, and an interactive E→T→L loop repeats it for bytes that
+    * have not changed. The inferred schema is therefore memoized, keyed
+    * on the session, the path, the `(path, length, modificationTime)`
+    * of every leaf file the read covers, and all of the session's SQL
+    * confs (time zone, `timestampType`, case sensitivity and the parser
+    * policy all change what inference returns). A hit reads with the
+    * memoized schema and starts no job; a miss infers exactly as an
+    * unmemoized read does and returns that frame.
+    *
+    * Racy window: when any file's mtime is less than [[RacyWindowMs]]
+    * before the listing, nothing is stored or looked up, and the read
+    * infers as usual. A same-length rewrite within one mtime tick
+    * would otherwise keep its identity and be served a stale schema
+    * (git's rule for "racily clean" index entries); 2 s covers stores
+    * with second-granularity mtimes. An unlistable or empty path also
+    * infers as usual, so Spark reports its own error.
     */
   def csv(spark: SparkSession, path: String, schemaDdl: Option[String] = None): DataFrame = {
     val base = spark.read.option("header", "true")
+    def infer(): DataFrame = base.option("inferSchema", "true").csv(path)
     schemaDdl match {
       case Some(ddl) => base.schema(ddl).csv(path)
-      case None      => base.option("inferSchema", "true").csv(path)
+      case None => csvVersion(spark, path) match {
+        case None => infer()
+        case Some(version) =>
+          var inferred: DataFrame = null
+          val schema = inferredCsvSchemas.get(spark, version) { inferred = infer(); inferred.schema }
+          if (inferred != null) inferred else base.schema(schema).csv(path)
+      }
     }
   }
 
-  /** S1b — CSV scan that SURFACES malformed rows instead of silently
-    * degrading: PERMISSIVE mode routes any row that fails the schema
-    * into a `_corrupt` column (nulls elsewhere), so a pipeline can
-    * split clean/dirty and quarantine the dirty — the principled
-    * version of the reference's coerce-everything-to-string fallback
-    * (simple_etl.py:165-169). At 100 TB silently dropping or stringly
-    * typing bad rows is how corrupt feeds go unnoticed for months.
+  /** Age below which a file's mtime may not yet tell its versions
+    * apart: a file this fresh is never memoized by [[csv]].
     */
+  private[graft] val RacyWindowMs = 2000L
+
+  // One entry is a StructType plus its key string (the conf part
+  // dominates), so a few KB; the cap bounds sessions discarded while
+  // their context lives, as for `Tables`' scan cache.
+  private val inferredCsvSchemas = new SessionMemo[StructType](maxEntries = 64)(_ => ())
+
+  /** The memo key of `path` in `spark`: its files' identities and the
+    * session's confs, or `None` when the path cannot be listed, covers
+    * no file, or covers a file inside the racy window.
+    */
+  private def csvVersion(spark: SparkSession, path: String): Option[String] = {
+    val listedAt = System.currentTimeMillis()
+    val files =
+      try {
+        val p = new Path(path)
+        val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+        Option(fs.globStatus(p)).getOrElse(Array.empty[FileStatus])
+          .flatMap(st => if (st.isDirectory) leafFiles(fs, st.getPath) else Seq(st))
+      } catch { case _: java.io.IOException => Array.empty[FileStatus] }
+    if (files.isEmpty || files.exists(_.getModificationTime > listedAt - RacyWindowMs)) None
+    else {
+      val ids = files.map(f => s"${f.getPath}\t${f.getLen}\t${f.getModificationTime}").sorted
+      val confs = spark.sessionState.conf.getAllConfs.toSeq.sorted.map { case (k, v) => s"$k=$v" }
+      Some(((path +: ids) ++ ("" +: confs)).mkString("\n"))
+    }
+  }
+
+  private def leafFiles(fs: FileSystem, dir: Path): Seq[FileStatus] = {
+    val it = fs.listFiles(dir, true)
+    val out = Seq.newBuilder[FileStatus]
+    while (it.hasNext) out += it.next()
+    out.result()
+  }
+
   /** S1c — RFC 4180 multiline CSV scan: `multiLine` lets quoted fields
     * span physical newlines, `escape='"'` reads doubled quotes — the
     * dialect [[graft.ops.Sinks.csvRfc4180]] writes and standard tools
@@ -50,6 +113,14 @@ object Sources {
       .schema(schemaDdl)
       .csv(path)
 
+  /** S1b — CSV scan that SURFACES malformed rows instead of silently
+    * degrading: PERMISSIVE mode routes any row that fails the schema
+    * into a `_corrupt` column (nulls elsewhere), so a pipeline can
+    * split clean/dirty and quarantine the dirty — the principled
+    * version of the reference's coerce-everything-to-string fallback
+    * (simple_etl.py:165-169). At 100 TB silently dropping or stringly
+    * typing bad rows is how corrupt feeds go unnoticed for months.
+    */
   def csvWithQuarantine(spark: SparkSession, path: String, schemaDdl: String): DataFrame =
     spark.read
       .option("header", "true")
