@@ -481,15 +481,6 @@ FROM $table GROUP BY 1 ORDER BY 1"""
       df: DataFrame, sortCols: Seq[Column]): DataFrame = {
     val spark = df.sparkSession
     val conf = spark.sessionState.conf
-    // A/B lever + escape hatch (pinWide discipline):
-    // spark.graft.rank.rangePartitioned=false restores the
-    // single-partition window formulation
-    if (conf.getConfString("spark.graft.rank.rangePartitioned", "true") != "true") {
-      val w = Window.orderBy(sortCols: _*)
-      val wAll = Window.partitionBy().rowsBetween(Long.MinValue, Long.MaxValue)
-      return df.withColumn("__rnk", row_number().over(w).cast("long"))
-        .withColumn("__ntot", count(lit(1)).over(wAll))
-    }
     val wide = math.max(spark.sparkContext.defaultParallelism,
       conf.numShufflePartitions)
     // Scale-adaptive width (the pinWide stats-gate discipline): below
@@ -574,14 +565,13 @@ FROM $table GROUP BY 1 ORDER BY 1"""
   /** Global INCLUSIVE running sum of `valueCol` over a TOTAL order,
     * without the single-partition `Window.orderBy` cumulative window
     * (billions of rows on ONE task at real scale). Same construction
-    * discipline — and the same `spark.graft.rank.rangePartitioned`
-    * lever — as [[withGlobalRowNumber]]: range-repartition on the sort
-    * key, partition-local running sums from a per-partition kernel over
-    * the partition-local sort, plus broadcast per-partition sum offsets
-    * prefix-scanned under an explicit constant partition (a frame
-    * bounded by the partition COUNT, not the data). Emits the input
-    * columns plus `outCol` (inclusive running sum) and `totCol` (grand
-    * total).
+    * discipline as [[withGlobalRowNumber]]: range-repartition on the
+    * sort key, partition-local running sums from a per-partition
+    * kernel over the partition-local sort, plus broadcast
+    * per-partition sum offsets prefix-scanned under an explicit
+    * constant partition (a frame bounded by the partition COUNT, not
+    * the data). Emits the input columns plus `outCol` (inclusive
+    * running sum) and `totCol` (grand total).
     *
     * Exactness: `sortCols` must be a KEY (total order, no ties) and
     * `valueCol` must be a non-null LONG or DECIMAL — exact associative
@@ -601,8 +591,6 @@ FROM $table GROUP BY 1 ORDER BY 1"""
       df.withColumn(outCol, sum(col(valueCol)).over(w))
         .withColumn(totCol, sum(col(valueCol)).over(wAll))
     }
-    if (conf.getConfString("spark.graft.rank.rangePartitioned", "true") != "true")
-      return legacyWindow
     val wide = math.max(spark.sparkContext.defaultParallelism,
       conf.numShufflePartitions)
     val advisory = conf.getConf(
@@ -2092,17 +2080,6 @@ FROM $table GROUP BY 1 ORDER BY 1"""
     * null can contribute neither a cents term nor a clip count, so
     * counting it in `n` would deflate both means.
     */
-  /** [[graft.Tables.spread]] of the percentile family's persisted
-    * narrow projection, behind `spark.graft.percentile.spreadProj`
-    * (default on) — the A/B lever + escape hatch for the
-    * spread-below-the-persist in [[winsorizedMean]]/[[iqrOutliers]].
-    */
-  private def spreadProjLever(df: DataFrame): DataFrame =
-    if (df.sparkSession.sessionState.conf.getConfString(
-        "spark.graft.percentile.spreadProj", "true") == "true")
-      graft.Tables.spread(df)
-    else df
-
   def winsorizedMean(
       df: DataFrame,
       valueCol: String,
@@ -2121,12 +2098,10 @@ FROM $table GROUP BY 1 ORDER BY 1"""
     // spread BELOW the persist: the narrow projection inherits the
     // single-file scan's one partition, so the cache build AND all
     // three cached reads (bucket census, boundary rank, clip aggregate)
-    // ran one-task map sides (SpreadFactProbe sf0.1: 0.78 -> 0.61s
-    // even with the cruder full-width outer spread). No-op on a wide
-    // scan; values/order untouched (percentiles are sort-based).
-    // spark.graft.percentile.spreadProj=false restores the unspread
-    // cache (A/B lever + escape hatch, same pattern as the rank family).
-    val proj = spreadProjLever(df
+    // ran one-task map sides (measured interleaved at sf0.1: 0.78 ->
+    // 0.61s even with the cruder full-width outer spread). No-op on a
+    // wide scan; values/order untouched (percentiles are sort-based).
+    val proj = graft.Tables.spread(df
       .select(col(groupCol), (col(valueCol).cast("double") + lit(0.0)).as("__v"))
       .where(col("__v").isNotNull))
       .persist() // lifetime: see priceIndexLaspeyres (harness drops it per query)
@@ -2181,7 +2156,7 @@ FROM $table GROUP BY 1 ORDER BY 1"""
     // [[winsorizedMean]], and the same spread-below-the-persist (the
     // cache and its three readers otherwise ride the single-file scan's
     // one partition)
-    val proj = spreadProjLever(df
+    val proj = graft.Tables.spread(df
       .select(col(groupCol), (col(valueCol).cast("double") + lit(0.0)).as("__v"))
       .where(col("__v").isNotNull))
       .persist() // lifetime: see priceIndexLaspeyres (harness drops it per query)

@@ -914,18 +914,14 @@ object Curation {
     * the distinct (sh, lang) pairs then checkpoint as compact rows
     * (shingle kernel runs ONCE — no planner roulette re-running the
     * explode per branch) and a long-keyed left join marks coverage.
-    * Measured interleaved on/off in one JVM (tools/GramToggleProbe,
-    * sf0.1, medians of 4): hash-agg 0.32s vs collect_set 0.82s
-    * quiesced; under 24 spinning background threads 0.40s (reps
-    * 0.34-0.56) vs 1.69s (1.55-2.02); under 48 threads 0.71s vs
-    * 2.19s — faster clean AND 4x flatter under load. (An even
-    * earlier formulation fed the exploded frame into two DISTINCTs
-    * plus a LEFT SEMI join: exchange reuse dedupes shuffle FILES, not
-    * the three post-shuffle aggregate executions stacked above them,
-    * so the shingle pipeline ran ~3x.)
-    *
-    * `spark.graft.gramCoverage.legacy=true` restores the collect_set
-    * shape — the A/B lever tools/GramToggleProbe measures with.
+    * Measured interleaved on/off in one JVM (sf0.1, medians of 4):
+    * hash-agg 0.32s vs collect_set 0.82s quiesced; under 24 spinning
+    * background threads 0.40s (reps 0.34-0.56) vs 1.69s (1.55-2.02);
+    * under 48 threads 0.71s vs 2.19s — faster clean AND 4x flatter
+    * under load. (An even earlier formulation fed the exploded frame
+    * into two DISTINCTs plus a LEFT SEMI join: exchange reuse dedupes
+    * shuffle FILES, not the three post-shuffle aggregate executions
+    * stacked above them, so the shingle pipeline ran ~3x.)
     */
   def gramCoverage(
       docs: DataFrame,
@@ -943,8 +939,6 @@ object Curation {
     */
   def gramCoverageFromShingles(docSh: DataFrame, docs: DataFrame): DataFrame = {
     import Num.trunc4
-    val legacy = docs.sparkSession.sessionState.conf
-      .getConfString("spark.graft.gramCoverage.legacy", "false") == "true"
     // valid-split docs feed neither side: drop before the join
     val dim = splitAssign(docs, "doc_id")
       .filter(col("split").isin("train", "test"))
@@ -957,39 +951,26 @@ object Curation {
     // round-robin spread left three. No-op once the scan is wide.
     val sp = graft.Tables.spreadBy(docSh, col("s")).join(dim, Seq("doc_id"))
       .select(col("lang"), col("split"), col("s").as("sh"))
-    val perLang =
-      if (legacy) {
-        val bySh = sp.groupBy(col("sh")).agg(
-          max(when(col("split") === "train", 1).otherwise(0)).as("in_train"),
-          // collect_set skips nulls, so train-side rows contribute nothing
-          collect_set(when(col("split") === "test", col("lang"))).as("test_langs"))
-        bySh.select(col("in_train"), explode(col("test_langs")).as("lang"))
-          .groupBy(col("lang"))
-          .agg(count(lit(1)).cast("long").as("n_test_shingles"),
-            sum(col("in_train")).cast("long").as("n_covered"))
-      } else {
-        // tl: the lang for test rows, null for train rows (and for
-        // null-lang test rows, which the legacy collect_set also
-        // skipped — the tr bit keeps them from masquerading as train)
-        val g = sp
-          .select(col("sh"),
-            when(col("split") === "test", col("lang")).as("tl"),
-            when(col("split") === "train", 1).otherwise(0).as("tr"))
-          .groupBy(col("sh"), col("tl"))
-          .agg(max(col("tr")).as("tr"))
-          // two branches read this: without the checkpoint, predicate
-          // pushdown splits the exchange and the explode runs per branch
-          .localCheckpoint(false)
-        val trainSh = g.filter(col("tl").isNull && col("tr") === 1)
-          .select(col("sh"), lit(1).as("in_train"))
-        g.filter(col("tl").isNotNull)
-          .select(col("sh"), col("tl").as("lang"))
-          .join(trainSh, Seq("sh"), "left")
-          .groupBy(col("lang"))
-          .agg(count(lit(1)).cast("long").as("n_test_shingles"),
-            sum(coalesce(col("in_train"), lit(0))).cast("long").as("n_covered"))
-      }
-    perLang
+    // tl: the lang for test rows, null for train rows (and for
+    // null-lang test rows, which the collect_set shape also
+    // skipped — the tr bit keeps them from masquerading as train)
+    val g = sp
+      .select(col("sh"),
+        when(col("split") === "test", col("lang")).as("tl"),
+        when(col("split") === "train", 1).otherwise(0).as("tr"))
+      .groupBy(col("sh"), col("tl"))
+      .agg(max(col("tr")).as("tr"))
+      // two branches read this: without the checkpoint, predicate
+      // pushdown splits the exchange and the explode runs per branch
+      .localCheckpoint(false)
+    val trainSh = g.filter(col("tl").isNull && col("tr") === 1)
+      .select(col("sh"), lit(1).as("in_train"))
+    g.filter(col("tl").isNotNull)
+      .select(col("sh"), col("tl").as("lang"))
+      .join(trainSh, Seq("sh"), "left")
+      .groupBy(col("lang"))
+      .agg(count(lit(1)).cast("long").as("n_test_shingles"),
+        sum(coalesce(col("in_train"), lit(0))).cast("long").as("n_covered"))
       .withColumn("coverage4",
         trunc4(col("n_covered").cast("double") / col("n_test_shingles").cast("double")))
       .orderBy(col("lang"))

@@ -540,7 +540,7 @@ object Dedup {
     // small), so the pair kernel is cheap per bucket and the aggregate's
     // own exchange is the right shape — a user repartition measurably
     // hurt the pipeline (interleaved A/B at sf0.1: d_minhash_lsh 0.99s
-    // unpinned vs 1.25s pinned, tools/PinToggleProbe).
+    // unpinned vs 1.25s pinned).
     val cand = bands
       .groupBy(col("band"), col("bucket"))
       .agg(collect_list(col("doc_id")).as("ds"))

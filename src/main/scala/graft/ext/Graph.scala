@@ -48,7 +48,7 @@ object Graph {
     // edges INTERLEAVED (a0,b0,a1,b1,...). The earlier limit+collect
     // formulation shipped |E| boxed Row objects through executeTake
     // and deserialized them one by one on the driver — measured
-    // (tools/CollectProbe, 600k-edge q_hits stream, interleaved meds):
+    // (600k-edge q_hits stream, interleaved medians):
     // row limit+collect 0.72-1.06s vs chunk-packed 0.55-0.72s against
     // a 0.54-0.68s bare-noop floor, i.e. the packed collect is ~free
     // while the Row path adds 0.2-0.4s per probe. Each task packs its

@@ -705,10 +705,10 @@ ORDER BY cos_sim DESC, vec_a, vec_b LIMIT $k"""
     * each row updates only the heaps of queries with a different
     * label. Same candidate set per query (corpus `vec_id >= nQueries`
     * already excluded every query id), same truncated-cosine heap
-    * ordering, bit-identical output (tools/HardNegAB pins row-level
-    * equality). At L labels this is 1 scan instead of L — the win
-    * grows with label vocabulary; measured 1.26 -> 0.23s interleaved
-    * medians at sf0.1 (tools/HardNegAB, 5 pairs, same JVM).
+    * ordering, bit-identical output (ExtSpec pins row-level equality
+    * with the per-label union). At L labels this is 1 scan instead of
+    * L — the win grows with label vocabulary; measured 1.26 -> 0.23s
+    * interleaved medians at sf0.1 (5 pairs, same JVM).
     */
   def hardNegatives(embeddings: DataFrame, nQueries: Int = 5, k: Int = 3): DataFrame = {
     val spark = embeddings.sparkSession

@@ -337,7 +337,7 @@ object TextOps {
     // per-doc term frame is small enough that AQE converts this to a
     // broadcast-hash self-join (zero shuffle) — a user repartition just
     // adds a wasted exchange in front of it (interleaved A/B at sf0.1:
-    // 0.48s unpinned vs 0.83s pinned, tools/PinToggleProbe).
+    // 0.48s unpinned vs 0.83s pinned).
     val pairs = dt.as("a")
       .join(dt.as("b"),
         col("a.doc_id") === col("b.doc_id") && col("a.term") < col("b.term"))
@@ -491,8 +491,8 @@ object TextOps {
     // posexplode + per-doc window lead stays: a window-free rewrite
     // (transform over an index sequence emitting packed "w1 w2"
     // strings, split back after the count aggregate) was built and
-    // MEASURED REJECTED this round (tools/FormulaAB interleaved,
-    // sf0.1: new 0.71-0.83s vs window 0.60-0.73s medians) — the
+    // MEASURED REJECTED (interleaved in one JVM, sf0.1: new
+    // 0.71-0.83s vs window 0.60-0.73s medians) — the
     // per-bigram concat allocation outweighs the doc_id exchange it
     // removes, the same verdict the arrays_zip variant got in r11
     // (see docLogLoss below).

@@ -50,7 +50,8 @@ import org.apache.spark.sql.internal.SQLConf
   *    the firing regime the session gate still bounds a shape-gate
   *    miss: total input is ~1 GB, so the worst case is one oversized
   *    local sort, and `spark.graft.compactSort=false` is the escape
-  *    hatch.
+  *    hatch; A/B it with
+  *    `tools.InterleavedAB <sfDir> 'spark.graft.compactSort=false'`.
   *
   * Matched conservatively: only the outermost Sort, reached from the
   * plan root through row-preserving, order-preserving wrappers

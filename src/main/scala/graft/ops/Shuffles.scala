@@ -31,8 +31,8 @@ object Shuffles {
     * is at worst the pre-gate behavior.)
     *
     * `spark.graft.pinWide=false` drops the pin (the kernel's own
-    * exchange takes over, AQE coalescing included) — the escape hatch,
-    * and the A/B lever tools/PinToggleProbe measures with.
+    * exchange takes over, AQE coalescing included) — the escape hatch;
+    * A/B it with `tools.InterleavedAB <sfDir> 'spark.graft.pinWide=false'`.
     */
   def pinWide(df: DataFrame, keys: Column*): DataFrame = {
     val spark = df.sparkSession

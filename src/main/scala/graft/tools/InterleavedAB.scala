@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev probe: interleaved A/B of session-conf sets over any subset of
   * the suite, inside ONE JVM. The host's ambient load arrives in waves
   * that dwarf most per-query deltas (r11 legs: same code drew 119-162s
@@ -14,7 +12,10 @@ import org.apache.spark.sql.SparkSession
   *   bConfs:  "k=v;k=v" applied for the B reps (A = session defaults,
   *            restored between reps). Confs must be runtime-settable.
   *   queries: comma-separated allowlist; default = whole suite.
-  * Env: GRAFT_AB_REPS (default 3 pairs).
+  * Env: GRAFT_AB_REPS (default 3 pairs). The session is
+  * [[graft.Bench.session]], so SPARK_GRAFT_CPUS, SPARK_GRAFT_SHUFFLE,
+  * SPARK_GRAFT_AQE and SPARK_GRAFT_EXTRA_CONF (base confs for both
+  * sides) act as they do for Bench.
   */
 object InterleavedAB {
   def main(args: Array[String]): Unit = {
@@ -29,28 +30,11 @@ object InterleavedAB {
       case None => graft.SparkEntry.queries.keys.toSeq.sorted
     }
     val pairs = sys.env.getOrElse("GRAFT_AB_REPS", "3").toInt
-    val spark = graft.Scratch.localFsConfs.foldLeft(
-      SparkSession.builder().master("local[32]"))((b, kv) => b.config(kv._1, kv._2))
-      .config("spark.local.dir", s"${graft.Scratch.dir()}/spark-local")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // match the bench's sf0.1 default (volume-derived AQE resolves
-      // to off below 1 GiB) so A/B deltas transfer to the graded leg
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.sql.extensions", "graft.ext.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .config("spark.cleaner.referenceTracking.blocking.shuffle", "true")
-      .getOrCreate()
+    // Bench's own session (master, volume-derived partitions and AQE,
+    // SPARK_GRAFT_EXTRA_CONF as confs for BOTH sides), so A/B deltas
+    // transfer to what Bench times
+    val spark = graft.Bench.session(dir)
     spark.sparkContext.setLogLevel("ERROR")
-    // session-wide BASE confs applied to BOTH sides (sbt runMain args
-    // cannot carry ';'-joined lists — sbt treats ';' as a command
-    // separator — so base confs ride an env var instead)
-    sys.env.getOrElse("GRAFT_AB_BASECONF", "").split(";").filter(_.contains("="))
-      .foreach { kv =>
-        val i = kv.indexOf('='); spark.conf.set(kv.take(i).trim, kv.drop(i + 1).trim)
-      }
     val aConfs = bConfs.map { case (k, _) =>
       (k, scala.util.Try(spark.conf.get(k)).toOption)
     }

@@ -1796,6 +1796,31 @@ class ExtSpec extends SparkSpec {
     assert(r.groupBy(_.getAs[Long]("query_id")).values.forall(_.length === 3))
   }
 
+  test("hardNegatives: one-pass kernel equals the per-label knnJoin union, rows and order") {
+    // the pre-r11 shape: one knnJoin per distinct query label, each
+    // over the corpus minus that label, unioned and totally ordered
+    def perLabel(embeddings: org.apache.spark.sql.DataFrame, nQueries: Int, k: Int)
+        : org.apache.spark.sql.DataFrame = {
+      val qs = embeddings.filter(col("vec_id") < nQueries)
+        .select(col("vec_id"), col("embedding"), col("label"))
+      val labels = qs.select(col("label").cast("int")).distinct()
+        .collect().map(_.getInt(0)).sorted
+      labels.map { l =>
+        Similarity.knnJoin(
+          embeddings.filter(col("vec_id") >= nQueries && col("label") =!= l),
+          qs.filter(col("label") === l), k)
+      }.reduce(_ unionAll _)
+        .orderBy(col("query_id"), col("cos_sim").desc, col("vec_id"))
+    }
+    val e = t("embeddings")
+    for ((nQ, k) <- Seq((5, 3), (8, 5))) {
+      val want = perLabel(e, nQ, k).collect().toSeq
+      val got = Similarity.hardNegatives(e, nQ, k).collect().toSeq
+      assert(want.nonEmpty)
+      assert(got === want, s"mismatch at nQueries=$nQ k=$k")
+    }
+  }
+
   test("basket combo kernel rejects a >1023-code dictionary (10-bit packing guard)") {
     import spark.implicits._
     // 1030 distinct brands mint codes past 1022; a small basket holding
@@ -2003,16 +2028,15 @@ class ExtSpec extends SparkSpec {
     // sizes straddle every ntile(10) remainder class (n % 10 = 0..9),
     // n < k, and n == 1 — the boundary cases of the SQL NTILE padding
     // rule the rank-arithmetic rewrite must reproduce bit-for-bit.
-    // Three modes: the default stats-gated small path (single-kernel
-    // rank), the forced WIDE path (advisory=1 byte pushes every frame
-    // over the volume gate, exercising the range-partition + broadcast
-    // offsets machinery), and the legacy single-window lever.
+    // Two modes: the default stats-gated small path (single-kernel
+    // rank) and the forced WIDE path (advisory=1 byte pushes every
+    // frame over the volume gate, exercising the range-partition +
+    // broadcast offsets machinery). The reference is the
+    // single-partition Window formulation computed below.
     val modes = Seq(
       "small" -> (() => {}),
       "wide" -> (() => spark.conf
-        .set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "1")),
-      "legacy" -> (() => spark.conf
-        .set("spark.graft.rank.rangePartitioned", "false")))
+        .set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "1")))
     for ((mode, set) <- modes; n <- Seq(1, 3, 7, 10, 11, 19, 20, 23, 64, 100))
       try {
         set()
@@ -2032,23 +2056,19 @@ class ExtSpec extends SparkSpec {
       assert(got.toSeq === want.toSeq, s"mismatch at n=$n mode=$mode")
     } finally {
       spark.conf.unset("spark.sql.adaptive.advisoryPartitionSizeInBytes")
-      spark.conf.unset("spark.graft.rank.rangePartitioned")
     }
   }
 
   test("abcClassification/spearmanSpend: range-partitioned cumsum equals the single-window formulation") {
     import spark.implicits._
     // withGlobalCumSum backs both consumers (decimal cents in abc, long
-    // counts in spearman's rank2). Three modes, legacy = the original
-    // single-partition cumulative window as the reference; sizes
-    // straddle 1 row, fewer rows than partitions, and multi-partition
-    // frames under the forced-wide gate.
+    // counts in spearman's rank2). Two modes, small = the reference;
+    // sizes straddle 1 row, fewer rows than partitions, and
+    // multi-partition frames under the forced-wide gate.
     val modes = Seq(
       "small" -> (() => {}),
       "wide" -> (() => spark.conf
-        .set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "1")),
-      "legacy" -> (() => spark.conf
-        .set("spark.graft.rank.rangePartitioned", "false")))
+        .set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "1")))
     def canon(rows: Array[org.apache.spark.sql.Row]): Seq[Seq[Any]] =
       rows.toSeq.map(_.toSeq)
     for (n <- Seq(1, 2, 7, 33, 100)) {
@@ -2064,10 +2084,10 @@ class ExtSpec extends SparkSpec {
             canon(Aggregates.spearmanSpend(orders).collect()))
         } finally {
           spark.conf.unset("spark.sql.adaptive.advisoryPartitionSizeInBytes")
-          spark.conf.unset("spark.graft.rank.rangePartitioned")
         }
       }
-      val (_, abcRef, spRef) = got.last // legacy reference
+      // below the volume gate withGlobalCumSum IS the single-partition window
+      val (_, abcRef, spRef) = got.head
       for ((mode, abc, sp) <- got) {
         assert(abc === abcRef, s"abc mismatch at n=$n mode=$mode")
         assert(sp === spRef, s"spearman mismatch at n=$n mode=$mode")
@@ -3453,12 +3473,27 @@ class ExtSpec extends SparkSpec {
 
   test("gram coverage: hash-agg shape equals the legacy collect_set shape") {
     // the r8 load-robust reformulation must be row-identical to the
-    // collect_set original it replaced (the A/B lever's correctness leg)
-    def run() = Curation.gramCoverage(t("documents", "sf0.01")).collect().toSeq
-    val hashAgg = run()
-    spark.conf.set("spark.graft.gramCoverage.legacy", "true")
-    val legacy = try run()
-      finally spark.conf.unset("spark.graft.gramCoverage.legacy")
+    // per-shingle collect_set original it replaced, inlined here
+    val docs = t("documents", "sf0.01")
+    val hashAgg = Curation.gramCoverage(docs).collect().toSeq
+    val dim = Curation.splitAssign(docs, "doc_id")
+      .filter(col("split").isin("train", "test"))
+      .select(col("doc_id"), col("lang"), col("split"))
+    val sp = Dedup.shingleHashes(docs).join(dim, Seq("doc_id"))
+      .select(col("lang"), col("split"), col("s").as("sh"))
+    val bySh = sp.groupBy(col("sh")).agg(
+      max(when(col("split") === "train", 1).otherwise(0)).as("in_train"),
+      // collect_set skips nulls, so train-side rows contribute nothing
+      collect_set(when(col("split") === "test", col("lang"))).as("test_langs"))
+    val legacy = bySh.select(col("in_train"), explode(col("test_langs")).as("lang"))
+      .groupBy(col("lang"))
+      .agg(count(lit(1)).cast("long").as("n_test_shingles"),
+        sum(col("in_train")).cast("long").as("n_covered"))
+      .withColumn("coverage4", Num.trunc4(
+        col("n_covered").cast("double") / col("n_test_shingles").cast("double")))
+      .orderBy(col("lang"))
+      .collect().toSeq
+    assert(hashAgg.nonEmpty)
     assert(hashAgg === legacy)
   }
 
