@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: times every query in SparkEntry.queries against
   * SPARK_GRAFT_SF_DIR and prints one JSON line (driver contract).
   * Results are fully materialized through the `noop` sink so the timing
@@ -23,7 +21,10 @@ import org.apache.spark.sql.SparkSession
   *    a zero-overhead single-process engine.
   */
 object Bench {
-  private def median(xs: Seq[Double]): Double = {
+  /** The median; the mean of the two middle values for an even count,
+    * -1 for none. Every graft timing tool reports through this one.
+    */
+  def median(xs: Seq[Double]): Double = {
     val s = xs.sorted
     if (s.isEmpty) -1.0
     else if (s.length % 2 == 1) s(s.length / 2)
@@ -33,7 +34,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt
-    val spark = session(sfDir)
+    val spark = GraftSession.bench(sfDir)
     spark.sparkContext.setLogLevel("WARN")
     // Untimed warm-up at smoke scale: JIT + codegen-compiler + shuffle
     // infra otherwise all land on whichever query happens to run first
@@ -90,15 +91,9 @@ object Bench {
         if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
       }
       val good = times.filter(_ >= 0)
-      // Untimed hygiene: queries that localCheckpoint/persist leave
-      // blocks pinned in the block manager; across ~250 queries those
-      // accumulate into GC pressure that shows up as phantom
-      // regressions on later queries (observed: d_containment 1.2s
-      // isolated vs 6.1s mid-run). Dropping them between queries keeps
+      // Untimed hygiene: dropping pinned blocks between queries keeps
       // each measurement independent.
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
+      GraftSession.release(spark)
       // Nudge the ContextCleaner: shuffle files and broadcast blocks of
       // DEAD plans are only reclaimed when their references are GC'd
       // (Spark's own periodic GC runs every 30min — longer than this
@@ -146,101 +141,5 @@ object Bench {
     println(header + packed.toString + "}}")
     spark.stop()
     if (nFailed > 0) sys.exit(1)
-  }
-
-  /** The session Bench times over `sfDir`: `local[SPARK_GRAFT_CPUS]`
-    * (default 32), shuffle partitions and AQE derived from the input
-    * volume under `sfDir` (SPARK_GRAFT_SHUFFLE / SPARK_GRAFT_AQE
-    * override them), and SPARK_GRAFT_EXTRA_CONF="k=v;k=v" applied last,
-    * at build time. Dev mains whose numbers must transfer to Bench
-    * (`tools.InterleavedAB`) build through here too. Prints the resolved
-    * master, partitions, AQE and extra confs to stderr.
-    */
-  def session(sfDir: String): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val tmpBase = Scratch.dir()
-    // Shuffle partitions sized by INPUT VOLUME, not a fixed constant —
-    // the standard production sizing rule (~64 MB of input per shuffle
-    // partition; Spark tuning guide's "few hundred MB per partition"
-    // band), floored at cpus/4 so concurrent small stages still spread
-    // over the box. At sf0.1 (~18 MB of parquet) this resolves to 8: a
-    // fixed partitions=cores setting makes every tiny post-shuffle
-    // stage pay 32 task launches to move kilobytes, and AQE's
-    // parallelism-first coalescing keeps most of them (measured: a
-    // fixed 32 costs ~12% suite-wide vs volume-sized partitions, and
-    // parallelismFirst=false recovered none of it). At sf1 the same
-    // rule grows the count back up, and at 100 TB it resolves to the
-    // hundreds of thousands a real cluster runs with. Compute-bound
-    // per-row kernels are unaffected: Tables.spread parallelizes those
-    // by defaultParallelism (=cores), not by this conf.
-    val dirBytes = try {
-      val d = new java.io.File(sfDir)
-      def walk(f: java.io.File): Long =
-        if (f.isDirectory) f.listFiles().map(walk).sum else f.length()
-      walk(d)
-    } catch { case _: Throwable => 0L }
-    // floored at 1: cpus < 4 with a sub-64MB fixture would otherwise
-    // resolve to 0, which Spark rejects as a shuffle-partition count
-    val volumeSized =
-      math.max(1, math.max(cpus.toInt / 4, (dirBytes / (64L << 20)).toInt)).toString
-    // Dev-only experiment knob (committed artifacts always use the
-    // default): decouple shuffle partitions from the volume rule.
-    val shuffleParts = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", volumeSized)
-    // AQE by INPUT VOLUME, same derivation discipline as the
-    // shuffle-partition rule above (r11, measured). AQE's levers —
-    // partition coalescing, skew-join splits, runtime SMJ->BHJ — all act
-    // on shuffles of real volume, and its price is structural: every
-    // Exchange becomes a separately-materialized query stage (one extra
-    // job submission + driver re-optimization round per stage, measured
-    // 40-70ms/wave via tools/StageWaterfall — q_hhi runs 8 jobs for a
-    // 25-row report). Below ~1 GiB of total input every shuffle in the
-    // suite is KB-scale, so there is nothing for AQE's levers to win
-    // back: interleaved same-JVM A/B over all 305 queries
-    // (tools/InterleavedAB, both sides exposed to the same ambient load)
-    // measured AQE off = -24.0s of 175.1s (-13.7%); a 14-query re-probe
-    // of the apparent regressors at 5 pairs confirmed every one was
-    // weather, not effect (worst true regression: q_tpch_q15 +0.06s).
-    // At sf1 (158 MB, tools/ScaleUp) the heavy-20 A/B still nets -3.5s
-    // for off — but the components have started to flip: q_hits'
-    // iterative join loop pays the largest AQE tax (-3.8s off: one
-    // re-optimization round per stage per iteration), while
-    // d_containment is the first query where AQE's levers WIN at volume
-    // (+4.0s off: the posting-list join wants runtime splits once hot
-    // shingles carry real bytes). The crossover therefore sits above
-    // the measured fixtures; 1 GiB keeps AQE off through the regime
-    // where the tax is proven and on where shuffles carry real bytes
-    // (skew, mis-estimated joins — not re-derivable statically).
-    // SPARK_GRAFT_AQE overrides either way for A/B runs.
-    val aqeDefault = if (dirBytes >= (1L << 30)) "true" else "false"
-    val aqe = sys.env.getOrElse("SPARK_GRAFT_AQE", aqeDefault)
-    // SPARK_GRAFT_EXTRA_CONF="k=v;k=v" — arbitrary conf overrides for
-    // A/B runs (e.g. AQE coalesce policy sweeps).
-    val extraConf = sys.env.getOrElse("SPARK_GRAFT_EXTRA_CONF", "")
-      .split(";").filter(_.contains("=")).map { kv =>
-        val i = kv.indexOf('='); (kv.take(i).trim, kv.drop(i + 1).trim)
-      }
-    val spark = (Scratch.localFsConfs.toSeq ++ extraConf).foldLeft(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.local.dir", s"$tmpBase/spark-local")
-      .config("spark.sql.shuffle.partitions", shuffleParts)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      // fixture events.ts is parquet TIMESTAMP(NANOS): read as ns-long
-      // (graft.ext.Events.normalizeTs converts to micros downstream)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", aqe)
-      .config("spark.sql.extensions", "graft.ext.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      // shuffle-file removals are async by default; on the larger SFs
-      // the cleanup of query N's shuffles otherwise runs DURING query
-      // N+1's timed reps (see the System.gc() note in main)
-      .config("spark.cleaner.referenceTracking.blocking.shuffle", "true")
-    )((b, kv) => b.config(kv._1, kv._2))
-      .getOrCreate()
-    val resolved = Seq("spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled") ++
-      extraConf.map(_._1)
-    System.err.println(s"[session] master=${spark.sparkContext.master} " +
-      resolved.distinct.map(k => s"$k=${spark.conf.getOption(k).orNull}").mkString(" "))
-    spark
   }
 }

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the DuckDB oracle compare. A query that
@@ -7,23 +6,7 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val tmpBase = Scratch.dir()
-    val spark = Scratch.localFsConfs.foldLeft(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.local.dir", s"$tmpBase/spark-local"))((b, kv) => b.config(kv._1, kv._2))
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // ANSI off: null-on-bad-cast semantics, matching the reference's
-      // runtime behavior and DuckDB TRY_CAST (SURVEY.md §7 risk register).
-      .config("spark.sql.ansi.enabled", "false")
-      // fixture events.ts is parquet TIMESTAMP(NANOS): read as ns-long
-      // (graft.ext.Events.normalizeTs converts to micros downstream)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.extensions", "graft.ext.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.verify(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // Dev-only subset knob (same contract as Bench): SPARK_GRAFT_ONLY=a,b
@@ -40,13 +23,8 @@ object Verify {
         failed += 1
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      // Same between-query cache hygiene as Bench: several operators
-      // persist() an intermediate their returned plan still references
-      // (so they cannot unpersist in-function); across 300+ queries
-      // those blocks would otherwise accumulate into GC pressure.
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
+      // same between-query release as Bench
+      GraftSession.release(spark)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

@@ -20,10 +20,6 @@ object Cleaning {
   def fillNulls(df: DataFrame, text: String = "UNKNOWN", num: Double = 0d): DataFrame =
     df.na.fill(text).na.fill(num)
 
-  /** T1 (column-scoped variant) — fill only the given columns. */
-  def fillNullsIn(df: DataFrame, text: String, num: Double, cols: Seq[String]): DataFrame =
-    df.na.fill(text, cols).na.fill(num, cols)
-
   /** T2 — exact deduplication over all columns
     * (reference: simple_etl.py:203-210, `df.dropDuplicates()`).
     * Distributed cost model: one hash shuffle on all columns; at scale

@@ -40,6 +40,5 @@ object Columns {
     * single biggest scan saver at 100 TB, so the library exposes it.
     */
   def select(df: DataFrame, cols: Seq[String]): DataFrame = df.select(cols.map(col): _*)
-  def dropCols(df: DataFrame, cols: Seq[String]): DataFrame = df.drop(cols: _*)
   def rename(df: DataFrame, from: String, to: String): DataFrame = df.withColumnRenamed(from, to)
 }

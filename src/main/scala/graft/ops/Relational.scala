@@ -32,16 +32,6 @@ object Relational {
     left.join(r, left(leftKey) === r(rightKey), how)
   }
 
-  /** Semi/anti joins — not in the reference UI (SURVEY.md §2.4) but
-    * first-class in any engine run at scale (EXISTS / NOT EXISTS without
-    * materializing the right side's columns).
-    */
-  def semiJoin(left: DataFrame, right: DataFrame, lk: String, rk: String): DataFrame =
-    left.join(right, left(lk) === right(rk), "left_semi")
-
-  def antiJoin(left: DataFrame, right: DataFrame, lk: String, rk: String): DataFrame =
-    left.join(right, left(lk) === right(rk), "left_anti")
-
   /** As-of join — for each left row, the single right row with the
     * greatest `rightTs <= leftTs` within the same key (the time-series
     * "most recent state at event time" join; DuckDB/kdb ASOF JOIN,

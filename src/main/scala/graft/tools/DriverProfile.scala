@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import scala.collection.mutable
 
 /** Dev probe: sampling profiler for the DRIVER side of a query's noop
@@ -12,25 +11,15 @@ import scala.collection.mutable
   * can only show as gaps.
   *
   * Usage: runMain graft.tools.DriverProfile <sfDir> <query> [loops=30]
-  * Env: GRAFT_PROBE_CONF="k=v;k=v" conf overrides.
+  * The session is [[graft.GraftSession.bench]]: SPARK_GRAFT_CPUS and
+  * SPARK_GRAFT_EXTRA_CONF="k=v;k=v" act as they do for Bench.
   */
 object DriverProfile {
   def main(args: Array[String]): Unit = {
     val dir = args(0); val name = args(1)
     val loops = if (args.length > 2) args(2).toInt else 30
-    val spark = graft.Scratch.localFsConfs.foldLeft(
-      SparkSession.builder().master("local[32]"))((b, kv) => b.config(kv._1, kv._2))
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.ext.GraftExtensions")
-      .config("spark.local.dir", graft.Scratch.dir())
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.GraftSession.bench(dir)
     spark.sparkContext.setLogLevel("ERROR")
-    sys.env.getOrElse("GRAFT_PROBE_CONF", "").split(";").filter(_.contains("="))
-      .foreach { kv =>
-        val i = kv.indexOf('='); spark.conf.set(kv.take(i).trim, kv.drop(i + 1).trim)
-      }
     def exec(): Unit =
       graft.SparkEntry.queries(name)(spark, dir)
         .write.mode("overwrite").format("noop").save()

@@ -1,15 +1,13 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: dump formatted physical plans for representative queries so
   * plan quality (pushdown, pruning, broadcast choice, codegen spans) can
   * be audited — the "is this the plan you'd want at 100 TB" check.
   *
+  * The session is [[graft.GraftSession.bench]], so the plans are the
+  * ones Bench times; SPARK_GRAFT_EXTRA_CONF="k=v;k=v" overrides confs.
+  *
   * Env:
-  *  - GRAFT_PROBE_CONF="k=v;k=v"  runtime conf overrides, so dumps can
-  *    match the bench session exactly (e.g. adaptive off + volume-sized
-  *    shuffle partitions at sf0.1).
   *  - GRAFT_EXPLAIN_DIR=plans/r12  additionally write each query's plan
   *    to <dir>/<query><GRAFT_EXPLAIN_SUFFIX>.txt (suffix default "",
   *    e.g. "_before"/"_after") — the committed evidence files.
@@ -18,22 +16,8 @@ object ExplainAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
     val names = if (args.length > 1) args.drop(1).toSet else Set.empty[String]
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.extensions", "graft.ext.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.bench(sfDir)
     spark.sparkContext.setLogLevel("ERROR")
-    sys.env.getOrElse("GRAFT_PROBE_CONF", "").split(";").filter(_.contains("="))
-      .foreach { kv =>
-        val i = kv.indexOf('='); spark.conf.set(kv.take(i).trim, kv.drop(i + 1).trim)
-      }
     val outDir = sys.env.get("GRAFT_EXPLAIN_DIR")
     val suffix = sys.env.getOrElse("GRAFT_EXPLAIN_SUFFIX", "")
     outDir.foreach(d => java.nio.file.Files.createDirectories(java.nio.file.Paths.get(d)))

@@ -13,9 +13,11 @@ package graft.tools
   *            restored between reps). Confs must be runtime-settable.
   *   queries: comma-separated allowlist; default = whole suite.
   * Env: GRAFT_AB_REPS (default 3 pairs). The session is
-  * [[graft.Bench.session]], so SPARK_GRAFT_CPUS, SPARK_GRAFT_SHUFFLE,
+  * [[graft.GraftSession.bench]], so SPARK_GRAFT_CPUS, SPARK_GRAFT_SHUFFLE,
   * SPARK_GRAFT_AQE and SPARK_GRAFT_EXTRA_CONF (base confs for both
   * sides) act as they do for Bench.
+  * A query with any failed timed run reports -1 on that side, stays out
+  * of the TOTAL, and makes the run exit 1 after the table.
   */
 object InterleavedAB {
   def main(args: Array[String]): Unit = {
@@ -33,7 +35,7 @@ object InterleavedAB {
     // Bench's own session (master, volume-derived partitions and AQE,
     // SPARK_GRAFT_EXTRA_CONF as confs for BOTH sides), so A/B deltas
     // transfer to what Bench times
-    val spark = graft.Bench.session(dir)
+    val spark = graft.GraftSession.bench(dir)
     spark.sparkContext.setLogLevel("ERROR")
     val aConfs = bConfs.map { case (k, _) =>
       (k, scala.util.Try(spark.conf.get(k)).toOption)
@@ -53,15 +55,12 @@ object InterleavedAB {
         System.err.println(s"[ab] $n failed: ${e.getMessage}"); -1.0
       }
     }
-    def hygiene(): Unit = {
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-      System.gc()
-    }
-    def med(xs: Seq[Double]) = { val s = xs.sorted; s(s.size / 2) }
+    def hygiene(): Unit = { graft.GraftSession.release(spark); System.gc() }
+    // -1 when any rep failed, as Bench reports a failed query
+    def med(xs: Seq[Double]) =
+      if (xs.exists(_ < 0)) -1.0 else graft.Bench.median(xs)
     // warm both sides once (codegen differs between conf sets)
     names.foreach { n => setA(); runOnce(n); setB(); runOnce(n); setA(); hygiene() }
-    var totA = 0.0; var totB = 0.0
     val rows = names.map { n =>
       val as = collection.mutable.ArrayBuffer[Double]()
       val bs = collection.mutable.ArrayBuffer[Double]()
@@ -70,15 +69,22 @@ object InterleavedAB {
         setB(); bs += runOnce(n)
       }
       setA(); hygiene()
-      val (ma, mb) = (med(as.toSeq), med(bs.toSeq))
-      totA += math.max(ma, 0); totB += math.max(mb, 0)
-      (n, ma, mb)
+      (n, med(as.toSeq), med(bs.toSeq), (as ++ bs).count(_ < 0))
     }
     println(f"[ab] ${"query"}%-28s ${"A_med"}%7s ${"B_med"}%7s ${"B-A"}%7s")
-    rows.sortBy { case (_, a, b) => a - b }.foreach { case (n, a, b) =>
+    rows.sortBy { case (_, a, b, _) => a - b }.foreach { case (n, a, b, _) =>
       println(f"[ab] $n%-28s $a%7.3f $b%7.3f ${b - a}%+7.3f")
     }
-    println(f"[ab] TOTAL A=$totA%.2f s  B=$totB%.2f s  delta=${totB - totA}%+.2f s over ${rows.size} queries")
+    // failed queries stay out of the TOTAL, as in Bench
+    val ok = rows.filter(_._4 == 0)
+    val (totA, totB) = (ok.map(_._2).sum, ok.map(_._3).sum)
+    println(f"[ab] TOTAL A=$totA%.2f s  B=$totB%.2f s  delta=${totB - totA}%+.2f s over ${ok.size} queries")
     spark.stop()
+    val nFailed = rows.map(_._4).sum
+    if (nFailed > 0) {
+      val bad = rows.filter(_._4 > 0).map(_._1)
+      System.err.println(s"[ab] $nFailed failed runs in ${bad.size} queries: ${bad.mkString(",")}")
+      sys.exit(1)
+    }
   }
 }

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 
@@ -8,26 +7,14 @@ import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
   * physical operator with its populated SQL metrics (rows, bytes,
   * spill) — the numbers the UI's SQL tab would show, for a headless
   * session. Usage: runMain graft.tools.MetricsProbe <sfDir> <query>
-  * Env: GRAFT_PROBE_CPUS (default 32), GRAFT_PROBE_CONF="k=v;k=v".
+  * The session is [[graft.GraftSession.bench]]: SPARK_GRAFT_CPUS and
+  * SPARK_GRAFT_EXTRA_CONF="k=v;k=v" act as they do for Bench.
   */
 object MetricsProbe {
   def main(args: Array[String]): Unit = {
     val dir = args(0); val name = args(1)
-    val cpus = sys.env.getOrElse("GRAFT_PROBE_CPUS", "32")
-    val spark = graft.Scratch.localFsConfs.foldLeft(
-      SparkSession.builder().master(s"local[$cpus]"))((b, kv) => b.config(kv._1, kv._2))
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.sql.extensions", "graft.ext.GraftExtensions")
-      .config("spark.local.dir", graft.Scratch.dir())
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.GraftSession.bench(dir)
     spark.sparkContext.setLogLevel("ERROR")
-    sys.env.getOrElse("GRAFT_PROBE_CONF", "").split(";").filter(_.contains("="))
-      .foreach { kv =>
-        val i = kv.indexOf('='); spark.conf.set(kv.take(i).trim, kv.drop(i + 1).trim)
-      }
     // capture the WRITE command's own QueryExecution — that is the plan
     // that actually runs (and whose metrics are populated)
     @volatile var lastQe: org.apache.spark.sql.execution.QueryExecution = null

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Does the pin change the PLAN for a query at this SF? Prints whether
   * the executed-plan text differs between spark.graft.pinWide on/off —
   * if not, the gate (size threshold) vetoed every pin call site and any
@@ -12,13 +10,7 @@ object PinPlanDiff {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val names = args.drop(1).toSeq
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.ext.GraftExtensions")
-      .config("spark.local.dir", graft.Scratch.dir())
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.GraftSession.bench(dir)
     spark.sparkContext.setLogLevel("ERROR")
     def planOf(name: String, on: Boolean): String = {
       spark.conf.set("spark.graft.pinWide", on.toString)

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.rules.RuleExecutor
 
 /** Dev probe: split Catalyst plan time per query into the tracker's
@@ -13,25 +12,14 @@ import org.apache.spark.sql.catalyst.rules.RuleExecutor
   * timed rep).
   *
   * Usage: runMain graft.tools.PlanPhaseProbe <sfDir> [query...]
-  * Env: GRAFT_PROBE_CONF="k=v;k=v" conf overrides for A/B runs.
+  * The session is [[graft.GraftSession.bench]]: SPARK_GRAFT_CPUS and
+  * SPARK_GRAFT_EXTRA_CONF="k=v;k=v" act as they do for Bench.
   */
 object PlanPhaseProbe {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = graft.Scratch.localFsConfs.foldLeft(
-      SparkSession.builder().master("local[32]"))((b, kv) => b.config(kv._1, kv._2))
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.ext.GraftExtensions")
-      .config("spark.local.dir", graft.Scratch.dir())
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.GraftSession.bench(dir)
     spark.sparkContext.setLogLevel("ERROR")
-    sys.env.getOrElse("GRAFT_PROBE_CONF", "").split(";").filter(_.contains("="))
-      .foreach { kv =>
-        val j = kv.indexOf('=')
-        spark.conf.set(kv.take(j).trim, kv.drop(j + 1).trim)
-      }
     val names =
       if (args.length > 1) args.drop(1).toSeq
       else graft.SparkEntry.queries.keys.toSeq.sorted
@@ -61,7 +49,6 @@ object PlanPhaseProbe {
       }
     }
     RuleExecutor.resetMetrics()
-    def med(xs: Seq[Double]) = xs.sorted.apply(xs.size / 2)
     val rows = names.flatMap { n =>
       try {
         val trials = (1 to 3).map { _ =>
@@ -86,8 +73,8 @@ object PlanPhaseProbe {
           }
           (wall, ph)
         }
-        val wall = med(trials.map(_._1))
-        def phase(k: String) = med(trials.map(_._2.getOrElse(k, 0.0)))
+        val wall = graft.Bench.median(trials.map(_._1))
+        def phase(k: String) = graft.Bench.median(trials.map(_._2.getOrElse(k, 0.0)))
         Some((n, wall, phase("analysis"), phase("optimization"), phase("planning")))
       } catch { case e: Throwable =>
         System.err.println(s"[planphase] $n failed: ${e.getMessage}"); None

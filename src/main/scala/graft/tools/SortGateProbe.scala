@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** One-off probe: print the optimizer size estimate feeding
   * CompactResultSortRule's stats gate for representative final-sort
   * children at a given SF dir, plus which sort shape each query's plan
@@ -10,12 +8,7 @@ import org.apache.spark.sql.SparkSession
 object SortGateProbe {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.ext.GraftExtensions")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.GraftSession.bench(dir)
     spark.sparkContext.setLogLevel("WARN")
     def probe(name: String): Unit = {
       val df = graft.SparkEntry.queries(name)(spark, dir)

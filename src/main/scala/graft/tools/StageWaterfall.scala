@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 import scala.collection.mutable.ArrayBuffer
 
 /** Dev probe: one warm run of a query, then a timed run with a
@@ -13,21 +12,8 @@ import scala.collection.mutable.ArrayBuffer
 object StageWaterfall {
   def main(args: Array[String]): Unit = {
     val dir = args(0); val name = args(1)
-    val cpus = sys.env.getOrElse("GRAFT_PROBE_CPUS", "32")
-    val spark = graft.Scratch.localFsConfs.foldLeft(SparkSession.builder().master(s"local[$cpus]"))((b, kv) => b.config(kv._1, kv._2))
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.extensions", "graft.ext.GraftExtensions")
-      .config("spark.local.dir", graft.Scratch.dir())
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.GraftSession.bench(dir)
     spark.sparkContext.setLogLevel("ERROR")
-    // optional conf overrides for A/B runs: GRAFT_PROBE_CONF="k=v;k=v"
-    sys.env.getOrElse("GRAFT_PROBE_CONF", "").split(";").filter(_.contains("="))
-      .foreach { kv =>
-        val i = kv.indexOf('='); spark.conf.set(kv.take(i).trim, kv.drop(i + 1).trim)
-      }
     // Tracker phases of the WRITE command's own QueryExecution (the
     // noop write wraps the query in a command and replans it — the
     // bare df's tracker does not see that cost).

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.StreamingQueryListener
 import scala.collection.mutable.ArrayBuffer
 
@@ -13,18 +12,7 @@ import scala.collection.mutable.ArrayBuffer
 object StreamProfile {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val tmpBase = graft.Scratch.dir()
-    val spark = graft.Scratch.localFsConfs.foldLeft(SparkSession.builder()
-      .master("local[32]")
-      .config("spark.local.dir", s"$tmpBase/spark-local"))((b, kv) => b.config(kv._1, kv._2))
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.extensions", "graft.ext.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.bench(sfDir)
     spark.sparkContext.setLogLevel("WARN")
     case class B(query: String, batchId: Long, rows: Long, durs: Map[String, Long])
     val batches = ArrayBuffer.empty[B]
