@@ -39,9 +39,10 @@ object SparkEntry {
 
   /** SNAPSHOT ARTIFACTS — materialized views shared by query families.
     *
-    * Four expensive common prefixes (the market-basket frame, the
-    * near-dup pair table, the hashed shingle index, the co-purchase
-    * pair graph) are each computed ONCE per (session, dataset) and
+    * Four expensive common prefixes (the market-basket frame and its
+    * brand dimension, the near-dup pair table, the hashed shingle
+    * index and the Jaccard pair graph over it, the co-purchase pair
+    * graph) are each computed ONCE per (session, dataset) and
     * written to session-scratch parquet; every consumer reads the
     * artifact file. This is exactly what a production corpus pipeline
     * does — the pair table / inverted index is materialized once per
@@ -60,6 +61,16 @@ object SparkEntry {
     * (per-PID, reclaimed when the owning process dies), so unpin is a
     * no-op. d_minhash_lsh still times the raw signature+verify
     * pipeline itself, so that cost stays an honestly measured number.
+    *
+    * An artifact is read back with the schema of the frame just
+    * written, so no footer-inference job follows its write; a file
+    * source makes every field nullable either way, so consumers see
+    * the schema an inferred read gives (PrewarmSpec pins this).
+    * [[prewarmArtifacts]] builds the artifacts as four independent
+    * chains run concurrently ([[artifactChains]]): shingle_index ->
+    * jaccard_pairs, neardup_pairs, baskets + brand_dim,
+    * copurchase_pairs. At snapshot volume nearly every build stage is
+    * one task, so one chain alone keeps only one core busy.
     */
   private val mvCache =
     new SessionMemo[DataFrame](maxEntries = 32)(_ => ())
@@ -68,7 +79,9 @@ object SparkEntry {
     mvCache.get(s, s"$name|$dir") {
       val safe = dir.replaceAll("[^A-Za-z0-9._-]", "_")
       val path = s"${Scratch.dir()}/mv/$safe/$name"
-      build.write.mode("overwrite").parquet(path)
+      val built = build
+      built.write.mode("overwrite").parquet(path)
+      def readBack = s.read.schema(built.schema).parquet(path)
       // §6 output file sizing: the builder's task count, not the data,
       // decided the file count — a 2 MB artifact written from 32 tasks
       // left 32 ~65 KB files, and EVERY consumer scan then pays one
@@ -87,7 +100,7 @@ object SparkEntry {
       val want = math.max(1, ((bytes + (64L << 20) - 1) / (64L << 20)).toInt)
       if (parts.length >= want * 2) {
         val tmp = new java.io.File(path + "__compact")
-        s.read.parquet(path).coalesce(want)
+        readBack.coalesce(want)
           .write.mode("overwrite").parquet(tmp.getPath)
         def rm(f: java.io.File): Unit = {
           Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
@@ -96,7 +109,7 @@ object SparkEntry {
         rm(d0)
         require(tmp.renameTo(d0), s"artifact compaction rename failed: $path")
       }
-      s.read.parquet(path)
+      readBack
     }
 
   private def shingleFrame(s: SparkSession, dir: String): DataFrame =
@@ -173,18 +186,69 @@ object SparkEntry {
         .select(col("a.p").as("pa"), col("b.p").as("pb"))
     }
 
+  /** The snapshot artifacts as independent build chains, longest
+    * first, each named by the artifacts it writes; a chain returns its
+    * artifacts' read-back frames. Only the pair graph depends on
+    * another artifact (it reads the shingle index), so it shares a chain
+    * with it; the basket frame and its brand dimension share one lazy
+    * build.
+    */
+  private[graft] def artifactChains(s: SparkSession, dir: String)
+      : Seq[(String, () => Seq[DataFrame])] = Seq(
+    "neardup_pairs" -> (() => Seq(nearDupPairs(s, dir))),
+    "shingle_index -> jaccard_pairs" ->
+      (() => Seq(shingleFrame(s, dir), jaccardPairs(s, dir))),
+    "baskets + brand_dim" -> (() => { val (b, d) = basketFrame(s, dir); Seq(b, d) }),
+    "copurchase_pairs" -> (() => Seq(coPurchasePairs(s, dir))))
+
   /** Force-build every snapshot artifact for `dir` (idempotent: memo
     * hits skip the write). [[Bench]] calls this untimed after warm-up —
     * the artifact is per-snapshot work, not per-query work — and
     * reports the wall time separately as `artifact_prewarm_sec`.
+    *
+    * The four chains of [[artifactChains]] run concurrently on a fixed
+    * pool of daemon threads, one per chain, named `graft-prewarm-<n>`:
+    * at snapshot volume nearly every build stage is a single task (one
+    * shuffle partition), so a serial prewarm leaves all but one core
+    * idle. Chains are submitted longest first so that Spark's FIFO
+    * scheduler favours them. A chain that asks for an artifact another
+    * chain is building waits on that build ([[SessionMemo]] builds each
+    * key once). Every chain runs to its end; the first failing chain,
+    * in submission order, is rethrown naming its artifacts. The pool's
+    * threads have ended when this returns or throws.
     */
   def prewarmArtifacts(s: SparkSession, dir: String): Unit = {
-    shingleFrame(s, dir)
-    nearDupPairs(s, dir)
-    jaccardPairs(s, dir)
-    basketFrame(s, dir)
-    coPurchasePairs(s, dir)
-    (): Unit
+    val chains = artifactChains(s, dir)
+    val made = new java.util.concurrent.ConcurrentLinkedQueue[Thread]
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(chains.size,
+      (r: Runnable) => {
+        val t = new Thread(r, s"graft-prewarm-${made.size + 1}")
+        t.setDaemon(true)
+        made.add(t)
+        t
+      })
+    try {
+      val running = chains.map { case (name, chain) =>
+        name -> pool.submit[Unit] { () =>
+          SparkSession.setActiveSession(s)
+          chain(): Unit
+        }
+      }
+      val failures = running.flatMap { case (name, f) =>
+        try { f.get(); None }
+        catch { case e: java.util.concurrent.ExecutionException =>
+          Some(new IllegalStateException(
+            s"snapshot artifact $name failed for $dir: ${e.getCause.getMessage}", e.getCause))
+        }
+      }
+      failures.headOption.foreach { first =>
+        failures.tail.foreach(first.addSuppressed)
+        throw first
+      }
+    } finally {
+      pool.shutdown()
+      made.forEach(_.join())
+    }
   }
 
   /** One entry per implemented operator from SURVEY.md §2 + extensions. */
@@ -1893,6 +1957,17 @@ ORDER BY COALESCE(o_orderkey, -1), COALESCE(c_custkey, -1)"""
     """SELECT CAST(epoch(date_trunc('hour', ts)) AS BIGINT) AS hour_epoch, event_type,
   COUNT(*) AS n, CAST(SUM(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS total_value
 FROM events GROUP BY 1, 2 ORDER BY 1, 2"""
+
+  /** Queries whose result is approximate or engine-local by design
+    * (simhash banding, IVF ANN, the decode stub's digests,
+    * approx_percentile sampling, BPE merge training): a digest check
+    * across engines or plans compares their rows and schema only. Each
+    * still has an [[oracleSql]] entry that replays the engine's own
+    * hashing or looping.
+    */
+  val approximateByDesign: Set[String] = Set(
+    "d_simhash64", "d_simhash_neardup", "d_bpe_merges", "m_features",
+    "q_order_stats_approx", "e_ann_ivf", "e_ann_ivf_idx")
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. EVERY query is oracle-gated — including

@@ -2,10 +2,7 @@ package graft
 
 import java.io.File
 import java.nio.file.Files
-import java.util.concurrent.{CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types._
 
@@ -17,33 +14,6 @@ import graft.ops.Sources
   * the racy window or a conf that changes inference infers again.
   */
 class CsvSchemaMemoSpec extends SparkSpec {
-
-  /** `body`'s result and the number of Spark jobs it started. */
-  private def jobsIn[T](s: SparkSession)(body: => T): (T, Int) = {
-    val sc = s.sparkContext
-    val group = s"csv-memo-${System.nanoTime()}"
-    val marker = s"$group-drain"
-    val jobs = new AtomicInteger
-    val drained = new CountDownLatch(1)
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull match {
-          case `group`  => jobs.incrementAndGet(): Unit
-          case `marker` => drained.countDown()
-          case _        =>
-        }
-    }
-    sc.addSparkListener(l)
-    try {
-      sc.setJobGroup(group, "measured")
-      val out = try body finally sc.clearJobGroup()
-      // the marker job's start is queued after every job of `body`
-      sc.setJobGroup(marker, "listener drain")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      assert(drained.await(30, TimeUnit.SECONDS), "listener bus did not drain")
-      (out, jobs.get)
-    } finally sc.removeSparkListener(l)
-  }
 
   /** Writes `text` to a fresh file and sets its mtime `ageMs` in the past. */
   private def csvFile(text: String, ageMs: Long): File = {

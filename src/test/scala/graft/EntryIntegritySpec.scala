@@ -70,4 +70,12 @@ class EntryIntegritySpec extends AnyFunSuite {
     val orphans = SparkEntry.oracleSql.keySet.diff(SparkEntry.queries.keySet)
     assert(orphans.isEmpty, s"oracleSql keys without a query: ${orphans.toSeq.sorted}")
   }
+
+  test("every approximate-by-design name is a query with oracle SQL") {
+    assert(SparkEntry.approximateByDesign.size === 7)
+    SparkEntry.approximateByDesign.toSeq.sorted.foreach { n =>
+      assert(SparkEntry.queries.contains(n), s"$n is not a query")
+      assert(SparkEntry.oracleSql.contains(n), s"$n has no oracle SQL")
+    }
+  }
 }
