@@ -6,10 +6,11 @@ import java.time.LocalDate
 import org.apache.avro.{LogicalTypes, Schema}
 import org.apache.avro.file.{CodecFactory, DataFileReader, DataFileWriter, SeekableByteArrayInput}
 import org.apache.avro.generic.{GenericData, GenericDatumReader, GenericDatumWriter, GenericRecord}
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types._
+import org.apache.spark.util.SerializableConfiguration
 
 import scala.jdk.CollectionConverters._
 
@@ -34,8 +35,16 @@ import scala.jdk.CollectionConverters._
   * sync markers inside large files — with the write side emitting one
   * file per upstream partition, per-file parallelism already equals the
   * producing job's, which is the shape that matters at scale.
+  *
+  * Both sides open files through the session's Hadoop conf
+  * (`spark.hadoop.*` and session-level keys included), broadcast once
+  * per call to the tasks.
   */
 object AvroIO {
+
+  /** The session's Hadoop conf, broadcast once for this call's tasks. */
+  private def hadoopConf(spark: SparkSession): Broadcast[SerializableConfiguration] =
+    spark.sparkContext.broadcast(new SerializableConfiguration(spark.sessionState.newHadoopConf()))
 
   /** Spark → Avro schema for the supported flat types. Every field is
     * union(null, T) so Spark nullability never truncates data.
@@ -106,7 +115,8 @@ object AvroIO {
     val sparkT = df.schema
     val avroJson = avroSchema(sparkT).toString
     val dir = new Path(path)
-    val fs = dir.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
+    val conf = hadoopConf(df.sparkSession)
+    val fs = dir.getFileSystem(conf.value.value)
     if (fs.exists(dir)) fs.delete(dir, true)
     fs.mkdirs(dir)
     // one job, one container file per non-empty partition; the count
@@ -116,7 +126,7 @@ object AvroIO {
       else {
         val schema = new Schema.Parser().parse(avroJson)
         val file = new Path(path, f"part-$pid%05d.avro")
-        val out = file.getFileSystem(new Configuration()).create(file, true)
+        val out = file.getFileSystem(conf.value.value).create(file, true)
         val w = new DataFileWriter(new GenericDatumWriter[GenericRecord](schema))
         w.setCodec(CodecFactory.deflateCodec(6))
         w.create(schema, out)
@@ -140,7 +150,8 @@ object AvroIO {
     * zero jobs before the scan itself.
     */
   def read(spark: SparkSession, path: String): DataFrame = {
-    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val conf = hadoopConf(spark)
+    val fs = new Path(path).getFileSystem(conf.value.value)
     val files = fs.globStatus(new Path(path, "*.avro"))
       .map(_.getPath.toString).sorted.toSeq
     require(files.nonEmpty, s"no .avro container files under $path")
@@ -156,7 +167,7 @@ object AvroIO {
       val schema = new Schema.Parser().parse(json)
       val p = new Path(f)
       val r = new org.apache.avro.file.DataFileStream[GenericRecord](
-        p.getFileSystem(new Configuration()).open(p),
+        p.getFileSystem(conf.value.value).open(p),
         new GenericDatumReader[GenericRecord](schema))
       val tc = org.apache.spark.TaskContext.get()
       if (tc != null) tc.addTaskCompletionListener[Unit](_ => r.close())

@@ -14,27 +14,18 @@ object StreamingOps {
 
   private val counter = new AtomicInteger(0)
 
-  /** Shuffle-partition count for the micro-batch aggregations below
-    * (SPARK_GRAFT_STREAM_PARTS overrides every query). The state store
-    * opens one store per shuffle partition per micro-batch, so on small
-    * streams fewer partitions = less bookkeeping — but the optimum is
-    * PER QUERY, not global (measured sf0.1, medians of 3, whole family
-    * at 2 / 4 / 16): window/dedup/join state likes 2 (st_left_join
-    * 2.03s at 2 vs 2.37 at 4 vs 5.10 at 16), `flatMapGroupsWithState`
-    * per-user state and the foreachBatch upsert like 4 (st_upsert
-    * 0.91s at 4 vs 2.26 at 2), session-window merge sweeps like 8.
-    * Each call site passes its measured default. On a real cluster
-    * size this to state volume, not the session default.
-    */
-  private def streamParts(dflt: Int): Int =
-    sys.env.get("SPARK_GRAFT_STREAM_PARTS").map(_.toInt).getOrElse(dflt)
-
-  /** Run `body` with a reduced shuffle-partition count: the streaming
-    * state store allocates one store per shuffle partition PER
+  /** Run `body` with a reduced shuffle-partition count `n`: the
+    * streaming state store allocates one store per shuffle partition PER
     * micro-batch, so a 32-partition default costs ~seconds of pure
     * bookkeeping on small streams. Results are partition-count-
     * independent (hash aggregation); restore the session value after.
-    * On a real cluster size this to the state volume, not the default.
+    * The optimum is PER QUERY, not global (measured sf0.1, medians of
+    * 3, whole family at 2 / 4 / 16): window/dedup/join state likes 2
+    * (st_left_join 2.03s at 2 vs 2.37 at 4 vs 5.10 at 16),
+    * `flatMapGroupsWithState` per-user state and the foreachBatch upsert
+    * like 4 (st_upsert 0.91s at 4 vs 2.26 at 2), session-window merge
+    * sweeps like 8. Each call site passes its measured count. On a real
+    * cluster size this to the state volume, not the default.
     */
   private def withStreamPartitions[T](spark: SparkSession, n: Int)(body: => T): T =
     withConfs(spark, Map(
@@ -99,7 +90,7 @@ object StreamingOps {
       .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
       .agg(count(lit(1)).as("n"), sum(col("value").cast("decimal(18,4)")).as("total_value_dec"))
     val name = s"graft_stream_hourly_${counter.incrementAndGet()}"
-    withStreamPartitions(spark, streamParts(2)) {
+    withStreamPartitions(spark, 2) {
       val q = agg.writeStream
         .outputMode("complete")
         .format("memory")
@@ -133,7 +124,7 @@ object StreamingOps {
       .agg(count(lit(1)).as("n"),
         sum(col("value").cast("decimal(18,4)")).as("total_value_dec"))
     val name = s"graft_stream_seasonality_${counter.incrementAndGet()}"
-    withStreamPartitions(spark, streamParts(2)) {
+    withStreamPartitions(spark, 2) {
       val q = agg.writeStream
         .outputMode("complete")
         .format("memory")
@@ -169,7 +160,7 @@ object StreamingOps {
       .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
       .agg(count(lit(1)).as("n"), sum(col("value").cast("decimal(18,4)")).as("total_value_dec"))
     val name = s"graft_stream_hourly_wm_${counter.incrementAndGet()}"
-    withStreamPartitions(spark, streamParts(2)) {
+    withStreamPartitions(spark, 2) {
       val q = agg.writeStream
         .outputMode("append")
         .format("memory")
@@ -208,7 +199,7 @@ object StreamingOps {
         sum(when(col("event_type") === "purchase", 1L).otherwise(0L)).as("n_purchases"))
       .filter(col("n_purchases") * 4 > col("n_events"))
     val name = s"graft_stream_mix_alert_${counter.incrementAndGet()}"
-    withStreamPartitions(spark, streamParts(2)) {
+    withStreamPartitions(spark, 2) {
       val q = agg.writeStream
         .outputMode("append")
         .format("memory")
@@ -252,7 +243,7 @@ object StreamingOps {
     // no-data batch would only evict expired dedup keys (see
     // skipNoDataBatch)
     withConfs(spark, skipNoDataBatch) {
-      withStreamPartitions(spark, streamParts(2)) {
+      withStreamPartitions(spark, 2) {
         val q = agg.writeStream.outputMode("complete").format("memory").queryName(name).start()
         try q.processAllAvailable()
         finally q.stop()
@@ -293,7 +284,7 @@ object StreamingOps {
     // session-window state scans (merge + finalization sweep) dominate
     // this query and parallelize well: 8 partitions measured 1.64s vs
     // 1.92s at the 4-partition family default (sf0.1)
-    withStreamPartitions(spark, streamParts(8)) {
+    withStreamPartitions(spark, 8) {
       val q = sess.writeStream.outputMode("append").format("memory").queryName(name).start()
       try q.processAllAvailable()
       finally q.stop()
@@ -338,7 +329,7 @@ object StreamingOps {
     // trailing no-data batch would only evict state (see
     // skipNoDataBatch)
     withConfs(spark, skipNoDataBatch) {
-      withStreamPartitions(spark, streamParts(2)) {
+      withStreamPartitions(spark, 2) {
         val q = joined.writeStream.outputMode("append").format("memory").queryName(name).start()
         try q.processAllAvailable()
         finally q.stop()
@@ -367,7 +358,7 @@ object StreamingOps {
       .agg(count(lit(1)).as("n"),
         sum(col("value").cast("decimal(18,4)")).as("total_value_dec"))
     val name = s"graft_stream_enrich_${counter.incrementAndGet()}"
-    withStreamPartitions(spark, streamParts(2)) {
+    withStreamPartitions(spark, 2) {
       val q = agg.writeStream.outputMode("complete").format("memory").queryName(name).start()
       try q.processAllAvailable()
       finally q.stop()
@@ -413,7 +404,7 @@ object StreamingOps {
     }
 
     val name = s"graft_stream_users_${counter.incrementAndGet()}"
-    withStreamPartitions(spark, streamParts(4)) {
+    withStreamPartitions(spark, 4) {
       val q = stream
         .groupByKey(_._1)
         .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout)(update)
@@ -481,7 +472,7 @@ object StreamingOps {
     }
 
     val name = s"graft_stream_transitions_${counter.incrementAndGet()}"
-    withStreamPartitions(spark, streamParts(4)) {
+    withStreamPartitions(spark, 4) {
       val q = stream
         .groupByKey(_._1)
         .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout)(update)
@@ -522,7 +513,7 @@ object StreamingOps {
     val stream = purchases(
       spark.readStream.schema(schema)
         .option("pathGlobFilter", "events.parquet").parquet(dir))
-    withStreamPartitions(spark, streamParts(4)) {
+    withStreamPartitions(spark, 4) {
       val q = stream.writeStream
         .option("checkpointLocation", s"$tmp/ckpt")
         .foreachBatch { (batch: DataFrame, _: Long) =>
@@ -579,7 +570,7 @@ object StreamingOps {
     }
 
     val name = s"graft_stream_new_users_${counter.incrementAndGet()}"
-    withStreamPartitions(spark, streamParts(2)) {
+    withStreamPartitions(spark, 2) {
       val q = stream
         .groupByKey(_._1)
         .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout)(update)
@@ -628,7 +619,7 @@ object StreamingOps {
       "left_outer")
       .select(col("click_id"), col("view_id"))
     val name = s"graft_stream_ssleft_${counter.incrementAndGet()}"
-    withStreamPartitions(spark, streamParts(2)) {
+    withStreamPartitions(spark, 2) {
       val q = joined.writeStream.outputMode("append").format("memory").queryName(name).start()
       try q.processAllAvailable()
       finally q.stop()
@@ -664,7 +655,7 @@ object StreamingOps {
       .groupBy(window(col("ts"), "1 hour").as("w"))
       .agg(count(lit(1)).as("n"))
     val name = s"graft_stream_anomaly_${counter.incrementAndGet()}"
-    withStreamPartitions(spark, streamParts(2)) {
+    withStreamPartitions(spark, 2) {
       val q = agg.writeStream
         .outputMode("complete")
         .format("memory")

@@ -681,6 +681,25 @@ class OpsSpec extends SparkSpec {
     assert(new java.io.File(tmp).listFiles().count(_.getName.endsWith(".avro")) === 2)
   }
 
+  test("avro write and read open files through the session's Hadoop conf") {
+    // a scheme only the session's SQL conf maps, uncached, so every
+    // driver and task lookup has to see the session's keys
+    spark.conf.set("fs.avrotest.impl", classOf[AvroTestFileSystem].getName)
+    spark.conf.set("fs.avrotest.impl.disable.cache", "true")
+    try {
+      val dir = Scratch.tempDir("avro_scheme")
+      val nation = t("nation")
+      ops.AvroIO.write(nation.repartition(3), s"avrotest://$dir/nation")
+      val back = ops.AvroIO.read(spark, s"avrotest://$dir/nation")
+      assert(back.orderBy(col("n_nationkey")).collect().map(_.toSeq).toSeq ===
+        nation.orderBy(col("n_nationkey")).collect().map(_.toSeq).toSeq)
+      assert(new java.io.File(s"$dir/nation").listFiles().count(_.getName.endsWith(".avro")) === 3)
+    } finally {
+      spark.conf.unset("fs.avrotest.impl")
+      spark.conf.unset("fs.avrotest.impl.disable.cache")
+    }
+  }
+
   test("binaryFiles: per-file content is complete and glob prunes extensions") {
     import spark.implicits._
     val tmp = Scratch.dir() + "/bin_rt"
@@ -695,4 +714,12 @@ class OpsSpec extends SparkSpec {
     assert(new String(content, "UTF-8") === "abc\nde\n")
     assert(rows(0).getAs[Long]("length") === content.length.toLong)
   }
+}
+
+/** The local filesystem under the `avrotest` scheme, for the
+  * session-conf avro test above.
+  */
+class AvroTestFileSystem extends NioLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("avrotest:///")
+  override def getScheme: String = "avrotest"
 }
